@@ -25,12 +25,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
-from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructType
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 
@@ -46,6 +47,24 @@ from realtime_change_data_capture_streaming_spark.cdc import commit as table_com
 #: tests/test_sink_scale.py pins).  The result is identical either way.
 _DISCOVERY_MIN_TABLE_BYTES = 64 << 20
 _DISCOVERY_MIN_BUCKETS = 16
+
+
+def _recorded_schema(m: dict | None, partial_ok: bool = False) -> StructType | None:
+    """The table schema a manifest records.  Only a ``schema_complete``
+    manifest records the WHOLE table's schema: older writers recorded the
+    schema of just the buckets one merge or partial compaction wrote, so
+    reads infer from footers for them (None) unless ``partial_ok``."""
+    if not m or not m.get("schema_json") or not (partial_ok or m.get("schema_complete")):
+        return None
+    return StructType.fromJson(json.loads(m["schema_json"]))
+
+
+def _widened_schema_json(table: StructType, written: StructType) -> str:
+    """``written`` plus every column of ``table`` it lacks.  A merge or
+    partial compaction rewrites only some buckets; the manifest schema
+    must keep serving the columns the untouched buckets still carry."""
+    have = set(written.fieldNames())
+    return StructType(written.fields + [f for f in table.fields if f.name not in have]).json()
 
 
 def _bucket_ids_in(vdir: str) -> list[int]:
@@ -185,6 +204,13 @@ class BucketedParquetSink:
         n = n_buckets if n_buckets is not None else self.current_n_buckets()
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(n))
 
+    def _schema(self, m: dict | None, buckets: list[int] | None = None) -> StructType:
+        """Schema of snapshot ``m``: the manifest's record, or footer
+        inference through :meth:`read_raw` (over ``buckets``) for a legacy
+        manifest."""
+        seq = m["seq"] if m else None
+        return _recorded_schema(m) or self.read_raw(buckets=buckets, at_seq=seq).schema
+
     def exists(self) -> bool:
         return self._manifest() is not None
 
@@ -213,17 +239,22 @@ class BucketedParquetSink:
         ``O(k * target_bucket_bytes)`` I/O, independent of table size
         (plan-pinned in ``tests/test_sink_scale.py``).
 
-        Probe keys are cast to the STORED key type first (so ``lookup([5])``
-        on a string-keyed table hashes ``"5"``, not the int), and the
-        bucket ids are computed by the same Catalyst expression the writer
-        used — a 1-job bounded collect over k probe rows, the point-lookup
-        analog of the other bounded metadata collects.
+        Probe keys are cast to the STORED key type from the manifest's
+        schema (so ``lookup([5])`` on a string-keyed table hashes ``"5"``,
+        not the int), and the bucket ids are computed by the same Catalyst
+        expression the writer used, over an Arrow table that Spark plans
+        as a driver-local relation: folded and collected with no job.  A
+        GET therefore runs exactly one Spark job, the pruned scan.  Probe
+        keys must share one Python type (pyarrow infers the probe column's
+        type from them): a mixed list such as ``[5, "6"]`` raises.
 
         ``at_seq`` probes an EARLIER snapshot (same time-travel contract
         as :meth:`read`); the bucket count comes from THAT snapshot's
         manifest, so a probe across a re-bucketing compaction still
         hashes with the bucket count its snapshot was written under.
         """
+        import pyarrow as pa
+
         if not keys:
             raise ValueError("lookup: need at least one key")
         if at_seq is not None:
@@ -231,53 +262,31 @@ class BucketedParquetSink:
         else:
             m = self._manifest()
             if m is not None:
-                # pin the whole probe to THIS snapshot: n_buckets, the
-                # schema probe and the pruned read must resolve the SAME
-                # manifest — re-resolving the live pointer later would let
-                # a concurrent re-bucketing compaction commit in between,
+                # pin the whole probe to THIS snapshot: n_buckets, the key
+                # type and the pruned read must resolve the SAME manifest —
+                # re-resolving the live pointer later would let a
+                # concurrent re-bucketing compaction commit in between,
                 # and the probe would prune the new layout with bucket ids
                 # hashed under the old count (silently empty results)
                 at_seq = m["seq"]
         n = (m or {}).get("n_buckets", self.n_buckets)
-        # key dtype from ONE bucket dir's footers — the schema probe must
-        # not list the whole table, or a k-key GET pays O(n_buckets)
-        # metadata I/O before any pruning happens
-        if m and m.get("buckets"):
-            vdir, ids = next(iter(sorted(table_commit.bucket_paths(self.path, m).items())))
-            schema_handle = self.spark.read.option("basePath", vdir).parquet(
-                f"{vdir}/_bucket={ids[0]}"
+        # a legacy manifest infers the key type from ONE bucket's footers:
+        # a GET must not pay O(n_buckets) metadata I/O before any pruning
+        one = [int(next(iter(m["buckets"])))] if m and m.get("buckets") else None
+        ktype = self._schema(m, buckets=one)[self.key_col].dataType
+        probe_keys = pa.array(keys)
+        if isinstance(ktype, BinaryType) and not pa.types.is_binary(probe_keys.type):
+            # a cast would hash the text's UTF-8 bytes: refuse rather than
+            # answer for keys the caller did not mean
+            raise TypeError(
+                f"lookup: {self.key_col!r} is binary; probe with bytes, not {probe_keys.type}"
             )
-        else:
-            schema_handle = self.read_raw(at_seq=at_seq)
-        ktype = schema_handle.schema[self.key_col].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        try:
-            # typed construction first: binary keys (str(b'..') is not a
-            # castable literal) and exact numerics probe correctly
-            probe = self.spark.createDataFrame(
-                [(k,) for k in keys], StructType([StructField(self.key_col, ktype)])
-            )
-        except (TypeError, ValueError, PySparkTypeError, PySparkValueError):
-            # coercion fallback for TYPE mismatches only: e.g. int probe
-            # keys against a string-keyed table hash the stored
-            # representation.  Any other createDataFrame failure
-            # (session/config trouble) propagates — swallowing it here
-            # would route good keys through str() coercion and return
-            # silently-empty results (ADVICE r12).  Binary keys never
-            # coerce: str(b'..') hashes the repr, not the bytes.
-            from pyspark.sql.types import BinaryType
-
-            if isinstance(ktype, BinaryType):
-                raise
-            probe = (
-                self.spark.createDataFrame(
-                    [(str(k),) for k in keys], f"{self.key_col} string"
-                ).select(F.col(self.key_col).cast(ktype).alias(self.key_col))
-            )
-        rows = probe.select(
-            F.col(self.key_col).alias("k"), self._bucket(n).alias("b")
-        ).collect()
+        rows = (
+            self.spark.createDataFrame(pa.table({self.key_col: probe_keys}))
+            .select(F.col(self.key_col).cast(ktype).alias(self.key_col))
+            .select(F.col(self.key_col).alias("k"), self._bucket(n).alias("b"))
+            .collect()
+        )
         bucket_ids = sorted({r["b"] for r in rows})
         typed_keys = [r["k"] for r in rows]
         return (
@@ -298,9 +307,12 @@ class BucketedParquetSink:
         bucket) files it references, so the returned frame is a CONSISTENT
         SNAPSHOT: merges and compactions committing afterwards write new
         version dirs and cannot disturb these files (GC retains referenced
-        versions plus a grace window).  Version groups are unioned by
-        name with null-fill, which also handles schema widening across
-        versions (a post-evolution merge only rewrites touched buckets).
+        versions plus a grace window).
+
+        Every version group is read with the manifest's recorded schema:
+        no footer-inference job, and buckets written before a schema
+        evolution read the evolved columns as nulls.  A legacy manifest
+        without one falls back to inference, unioned by name with null-fill.
 
         ``at_seq`` reads the snapshot published at that commit instead of
         the live one — Delta/Iceberg-style time travel, bounded by the
@@ -323,30 +335,25 @@ class BucketedParquetSink:
             if buckets is not None:
                 df = df.filter(F.col("_bucket").isin(list(buckets)))
             return df
-        groups = table_commit.bucket_paths(self.path, m)
+        schema = _recorded_schema(m)
         want = set(buckets) if buckets is not None else None
         parts = []
-        for vdir, bids in groups.items():
+        for vdir, bids in table_commit.bucket_paths(self.path, m).items():
             sel = bids if want is None else [b for b in bids if b in want]
             if not sel:
                 continue
-            paths = [f"{vdir}/_bucket={b}" for b in sel]
-            parts.append(self.spark.read.option("basePath", vdir).parquet(*paths))
+            reader = self.spark.read.option("basePath", vdir)
+            if schema is not None:
+                reader = reader.schema(schema)
+            parts.append(reader.parquet(*[f"{vdir}/_bucket={b}" for b in sel]))
         if not parts:
-            # empty selection: zero rows with the snapshot's schema.  The
-            # manifest's recorded schema covers the fully-empty table (all
-            # rows tombstone-purged by compaction: the version dir holds
-            # no parquet to infer from).
-            if m.get("schema_json"):
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(m["schema_json"]))
-                )
-            empty = self.spark.read.parquet(vdir_live).limit(0)
-            return empty
+            # empty selection: zero rows with the snapshot's schema (the
+            # recorded one also covers a fully tombstone-purged table,
+            # whose version dir holds no parquet to infer from)
+            schema = schema or _recorded_schema(m, partial_ok=True)
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
+            return self.spark.read.parquet(vdir_live).limit(0)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -609,7 +616,7 @@ class BucketedParquetSink:
             # a read-back of the files just written (no recompute, no
             # cache) while ``current_touched``'s version is still the live
             # manifest.  Raising here aborts the commit.
-            staged = self.spark.read.parquet(vdir).drop("_bucket")
+            staged = self.spark.read.schema(bucketed.schema).parquet(vdir).drop("_bucket")
             pre_write(current_touched, staged)
         bucket_map = {**(old_map or {}), **{str(b): vname for b in written}}
         table_commit.commit(
@@ -619,9 +626,12 @@ class BucketedParquetSink:
                 "n_buckets": n0,
                 "buckets": bucket_map,
                 "order_cols": list(order_cols),
-                # the table schema rides in the manifest so a fully-empty
-                # snapshot (every row tombstone-purged) stays readable
-                "schema_json": bucketed.schema.json(),
+                # the table schema rides in the manifest: every read uses
+                # it, and a fully-empty snapshot stays readable
+                "schema_json": _widened_schema_json(
+                    self._schema(_m0) if _m0 else StructType(), bucketed.schema
+                ),
+                "schema_complete": True,
             },
             keep=self.keep,
             # CAS against the snapshot this merge was computed from: a
@@ -689,43 +699,32 @@ def compact_sink(
         and "buckets" in m
         and max_buckets < len(m["buckets"])
     )
+    chosen: list[int] = []
     if partial:
         # oldest-version-first: rewriting the buckets that still point into
         # the oldest dirs is what lets GC collapse the version chain
         by_age = sorted(m["buckets"].items(), key=lambda kv: (kv[1], int(kv[0])))
         chosen = [int(b) for b, _ in by_age[:max_buckets]]
-        kept = sink.read_raw(buckets=chosen, at_seq=m["seq"]).filter(not_tombstone_to_purge)
-        staged = kept.drop("_bucket").withColumn("_bucket", sink._bucket(n_new))
-        vdir, seq = table_commit.begin(sink.path)
-        staged.repartition("_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(vdir)
-        vname = os.path.basename(vdir)
-        written = set(_bucket_ids_in(vdir))
-        new_map = dict(m["buckets"])
-        for b in chosen:
-            if b in written:
-                new_map[str(b)] = vname
-            else:
-                # every row in the bucket was a purged tombstone
-                new_map.pop(str(b), None)
-        meta = {"n_buckets": n_new, "buckets": new_map, "schema_json": staged.schema.json()}
-        if m.get("order_cols") is not None:
-            meta["order_cols"] = m["order_cols"]
-        table_commit.commit(
-            sink.path, seq, meta, keep=sink.keep, expect_prev=m["seq"], staged=vdir
-        )
-        return
-    kept = sink.read_raw(at_seq=m["seq"] if m else None).filter(not_tombstone_to_purge)
-    staged = kept.drop("_bucket").withColumn("_bucket", sink._bucket(n_new))
+    kept = sink.read_raw(buckets=chosen if partial else None, at_seq=m["seq"] if m else None)
+    kept = kept.filter(not_tombstone_to_purge).drop("_bucket")
+    staged = kept.withColumn("_bucket", sink._bucket(n_new))
     vdir, seq = table_commit.begin(sink.path)
     staged.repartition("_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(vdir)
-    # full compaction collapses the version chain: every bucket now serves
-    # from the single new version, and commit() GCs the superseded ones
-    # once the grace window passes.  A table whose every row was a purged
-    # tombstone commits an EMPTY bucket map — still readable: the
-    # manifest's schema_json serves the zero-row frame.
-    vname = os.path.basename(vdir)
-    bucket_map = {str(b): vname for b in _bucket_ids_in(vdir)}
-    meta = {"n_buckets": n_new, "buckets": bucket_map, "schema_json": staged.schema.json()}
+    # a partial run keeps the untouched buckets' versions (and the columns
+    # only they carry in the schema); a full one collapses the version
+    # chain: every bucket serves from the new version, and commit() GCs
+    # the superseded ones once the grace window passes.  A rewritten
+    # bucket whose every row was a purged tombstone leaves the map — even
+    # an EMPTY map stays readable: schema_json serves the zero-row frame.
+    bucket_map = {b: v for b, v in m["buckets"].items() if int(b) not in chosen} if partial else {}
+    bucket_map.update({str(b): os.path.basename(vdir) for b in _bucket_ids_in(vdir)})
+    table_schema = sink._schema(m) if partial else StructType()
+    meta = {
+        "n_buckets": n_new,
+        "buckets": bucket_map,
+        "schema_json": _widened_schema_json(table_schema, staged.schema),
+        "schema_complete": True,
+    }
     if m is not None and m.get("order_cols") is not None:
         meta["order_cols"] = m["order_cols"]
     table_commit.commit(

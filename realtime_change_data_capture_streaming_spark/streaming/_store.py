@@ -25,12 +25,21 @@ def read_partitioned_store(
     """Rows of the live store snapshot, cast to ``schema`` (a DDL string
     whose column order is the output order), pruned at the PATH level to
     ``ids`` when given (the same ``basePath`` + explicit-dirs idiom as the
-    sink's ``read_raw``)."""
+    sink's ``read_raw``).  A manifest without a ``buckets`` map raises."""
     from pyspark.sql import functions as F
 
     m = table_commit.read_manifest(store)
     if not m:
         return spark.createDataFrame([], schema)
+    if "buckets" not in m:
+        # a live version but no bucket map: the earlier flat layout.  Read
+        # through the (absent) map it would serve as empty, silently
+        # dropping every row it holds
+        raise ValueError(
+            f"store {store!r} (manifest seq {m.get('seq')}) has no 'buckets' map: "
+            "it was written in the flat pre-bucket-map layout; rebuild it "
+            "in the bucket-mapped layout"
+        )
     want = {int(k) for k in ids} if ids is not None else None
     # Spark's own DDL parser, not string-splitting: parameterized types
     # (decimal(18,2), map<...>) contain commas/spaces a naive split mangles

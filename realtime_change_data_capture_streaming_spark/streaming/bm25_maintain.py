@@ -209,11 +209,13 @@ def _read_erased(
 ) -> DataFrame | None:
     """The committed erased doc_id set (bucket-mapped on
     ``doc_id % N_DOC_BUCKETS``), path-pruned to a bucket subset when
-    given; None when nothing was ever erased."""
+    given; None when nothing was ever erased.  A manifest in the earlier
+    flat layout raises: reading it as "nothing erased" while its
+    counters still correct the scores would resurface erased documents."""
     from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
 
     m = table_commit.read_manifest(erased_root)
-    if m is None or not m.get("buckets"):
+    if m is None or m.get("buckets") == {}:
         return None
     return read_partitioned_store(spark, erased_root, "ebucket", "doc_id bigint", ids=buckets)
 

@@ -17,3 +17,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.hookimpl(trylast=True)
+def pytest_collection_modifyitems(config, items):
+    # start the default-conf sweep's worker process (its own JVM) as soon
+    # as its test is selected, so it overlaps the tests that run first;
+    # trylast: run after -k/-m/--deselect have removed deselected items
+    if config.option.collectonly:
+        return
+    for item in items:
+        if item.nodeid.endswith("test_all_queries_plan_on_default_conf_session"):
+            item.module.start_sweep()

@@ -10,8 +10,10 @@ from pyspark.sql import functions as F
 from realtime_change_data_capture_streaming_spark.llm_ops.text import text_bm25_topk
 from realtime_change_data_capture_streaming_spark.session import scratch_dir
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
+from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 from realtime_change_data_capture_streaming_spark.streaming.bm25_maintain import (
     _ingest_batch,
+    _read_erased,
     _serve_topk,
     _stats,
     stream_bm25_index_maintain,
@@ -609,3 +611,18 @@ def test_erasure_rewrites_only_touched_buckets(spark, tmp_path):
     # bucket-pruned read returns exactly bucket 0's ids
     got0 = sorted(r["doc_id"] for r in _read_erased(spark, er, [0]).collect())
     assert got0 == [0, 16, 32]
+
+
+def test_flat_layout_erased_set_raises(spark, tmp_path):
+    """An erased-set manifest from the flat layout (a live version, no
+    bucket map) must raise, not read as "nothing erased": its counters
+    would still correct the scores while the erased docs came back."""
+    root = str(tmp_path / "erased")
+    assert _read_erased(spark, root) is None  # never erased anything
+    staged, seq = table_commit.begin(root)
+    ids = spark.range(3).withColumnRenamed("id", "doc_id").coalesce(1)
+    ids.write.mode("overwrite").parquet(staged)
+    meta = {"applied_bid": 0, "n_erased": 3, "dl_erased": 30}
+    table_commit.commit(root, seq, meta=meta, staged=staged)
+    with pytest.raises(ValueError, match="no 'buckets' map"):
+        _read_erased(spark, root)

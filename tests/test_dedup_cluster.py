@@ -313,3 +313,23 @@ def test_erase_splits_component_and_drops_edgeless_survivors(spark):
     _erase_dedup_components(sh_store, as_store, dels, 1)
     assert table_commit.read_manifest(as_store)["seq"] == seq_before
     assert assigns() == after
+
+
+def test_flat_layout_assign_store_raises(spark, tmp_path):
+    """An assignment store whose manifest has a live version but no
+    bucket map (the flat layout) must raise instead of reading as empty
+    — an empty read would forget every prior component assignment."""
+    import pytest
+
+    from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
+    from realtime_change_data_capture_streaming_spark.streaming.neardup import _read_assign
+
+    store = str(tmp_path / "assign")
+    assert _read_assign(spark, store).count() == 0  # no store yet
+    staged, seq = table_commit.begin(store)
+    spark.createDataFrame([(1, 1), (2, 1)], "node bigint, component bigint").coalesce(
+        1
+    ).write.mode("overwrite").parquet(staged)
+    table_commit.commit(store, seq, meta={"applied_bid": 0}, staged=staged)
+    with pytest.raises(ValueError, match="no 'buckets' map"):
+        _read_assign(spark, store)

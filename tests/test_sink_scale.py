@@ -11,10 +11,15 @@
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import time
+import uuid
 
+import pyarrow as pa
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
@@ -836,8 +841,12 @@ def test_point_lookup_time_travel(spark, big_parsed, tmp_path):
     assert float(sink.lookup([key]).collect()[0]["amount"]) == 9999.99
     assert sink.lookup([key], at_seq=0).collect()[0]["amount"] == old_amount
     # re-bucket 8 -> a different power of two; the live probe uses the new
-    # count, the at_seq probe the old count — both must still find the key
-    compact_sink(sink, purge_tombstones_through_lsn=0, target_bucket_bytes=1)
+    # count, the at_seq probe the old count — both must still find the key.
+    # A target of 1/32 of the table re-buckets to >= 32 buckets; a 1-byte
+    # target would hit the 2^20 clamp and write one file per row
+    compact_sink(
+        sink, purge_tombstones_through_lsn=0, target_bucket_bytes=max(1, sink.table_bytes() // 32)
+    )
     assert sink.current_n_buckets() != 8
     assert float(sink.lookup([key]).collect()[0]["amount"]) == 9999.99
     assert sink.lookup([key], at_seq=1).collect()[0]["amount"] is not None
@@ -858,3 +867,143 @@ def test_bucket_arithmetic_matches_repartition_partition_id(spark):
         )
     )
     assert df.filter(F.col("pid") != F.col("bucket")).count() == 0
+
+
+def _jobs_run_by(spark, fn) -> list[list[str]]:
+    """Stage names of every Spark job ``fn`` runs, one list per job —
+    read back from ``statusTracker()`` under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+
+
+def _is_footer_inference(stage_names: list[str]) -> bool:
+    # a read without a schema infers it in a job of its own, named after
+    # the DataFrameReader.parquet call that planned it
+    return any(n.startswith("parquet at ") for n in stage_names)
+
+
+@pytest.fixture(scope="module")
+def versioned_sink(spark, big_parsed, tmp_path_factory):
+    """The 8192-key table in 32 buckets (the bucket-discovery merge path)
+    with three update merges on top: its buckets span four version dirs."""
+    sink = BucketedParquetSink(spark, str(tmp_path_factory.mktemp("ver") / "s"), n_buckets=32)
+    sink.merge(big_parsed)
+    keys = [r[0] for r in big_parsed.select("key").orderBy("key").limit(30).collect()]
+    for i in range(3):
+        sink.merge(
+            big_parsed.filter(F.col("key").isin(keys[i * 10 : (i + 1) * 10])).withColumn(
+                "lsn", F.col("lsn") + 1_000_000 * (i + 1)
+            )
+        )
+    assert len(set(sink._manifest()["buckets"].values())) > 2
+    return sink
+
+
+def test_point_lookup_runs_one_job(spark, big_parsed, versioned_sink):
+    """A GET learns the key type from the manifest's schema and computes
+    its bucket ids on the driver (an Arrow probe is a local relation), so
+    on a multi-version sink the only Spark job is the pruned scan."""
+    key = big_parsed.select("key").orderBy(F.desc("key")).limit(1).collect()[0][0]
+    got = []
+    jobs = _jobs_run_by(spark, lambda: got.extend(versioned_sink.lookup([key]).collect()))
+    assert len(jobs) == 1, jobs
+    assert [r["transaction_id"] for r in got] == [key]
+
+
+def test_point_lookup_ten_thousand_keys(big_parsed, versioned_sink):
+    """A 10,000-key probe (every stored key plus misses) returns exactly
+    the matching rows."""
+    stored = sorted(r[0] for r in big_parsed.select("key").collect())
+    probe = stored + [f"miss-{i}" for i in range(10_000 - len(stored))]
+    assert sorted(r["key"] for r in versioned_sink.lookup(probe).collect()) == stored
+
+
+def test_discovery_merge_infers_no_schema(spark, big_parsed, versioned_sink):
+    """The bucket-discovery merge reads the touched buckets and reads
+    back its staged version for ``pre_write`` with known schemas: no
+    parquet footer-inference job, however many version dirs it spans."""
+    sink = versioned_sink
+    # the detector does see an inference job when one runs
+    assert any(
+        map(_is_footer_inference, _jobs_run_by(spark, lambda: spark.read.parquet(sink.data_dir())))
+    )
+    keys = [r[0] for r in big_parsed.select("key").orderBy("key").limit(40).collect()]
+    batch = big_parsed.filter(F.col("key").isin(keys[::4])).withColumn(
+        "lsn", F.col("lsn") + 9_000_000
+    )
+    seen = []
+    jobs = _jobs_run_by(
+        spark, lambda: sink.merge(batch, pre_write=lambda old, staged: seen.append(staged.columns))
+    )
+    assert seen, "pre_write never ran"
+    assert not [j for j in jobs if _is_footer_inference(j)], jobs
+
+
+def test_point_lookup_binary_keys(spark, big_parsed, tmp_path):
+    """Bytes probe a binary-keyed table; a str probe is refused, not cast
+    (its UTF-8 bytes are not the key the caller meant)."""
+    sink = BucketedParquetSink(spark, str(tmp_path / "bin"), n_buckets=16)
+    sink.merge(big_parsed.orderBy("key").limit(50).withColumn("key", F.col("key").cast("binary")))
+    key = big_parsed.select("key").orderBy("key").limit(1).collect()[0][0]
+    got = sink.lookup([key.encode(), b"no-such-key"]).collect()
+    assert [bytes(r["key"]) for r in got] == [key.encode()]
+    with pytest.raises(TypeError, match="binary"):
+        sink.lookup([key])
+
+
+def test_point_lookup_key_literals(spark, big_parsed, tmp_path):
+    """Keys with quotes, backslashes and non-ASCII characters round-trip
+    through the probe, and duplicate probe keys return one row each."""
+    odd = ['o"brien', "it's", "back\\slash", "ключ-ü-日本"]
+    rows = big_parsed.orderBy("key").limit(len(odd)).withColumn(
+        "key",
+        F.element_at(
+            F.array(*[F.lit(k) for k in odd]),
+            F.row_number().over(Window.orderBy("key")).cast("int"),
+        ),
+    )
+    sink = BucketedParquetSink(spark, str(tmp_path / "odd"), n_buckets=32)
+    sink.merge(rows)
+    assert sorted(r["key"] for r in sink.lookup(odd).collect()) == sorted(odd)
+    assert [r["key"] for r in sink.lookup([odd[0], odd[0], odd[0]]).collect()] == [odd[0]]
+
+
+def test_point_lookup_mixed_key_types_raise(versioned_sink):
+    """The probe's type is inferred from the keys themselves, so they
+    must share one Python type."""
+    with pytest.raises((pa.ArrowInvalid, pa.ArrowTypeError)):
+        versioned_sink.lookup([5, "6"])
+
+
+def test_point_lookup_unstamped_manifest_infers_one_bucket(
+    spark, big_parsed, versioned_sink, tmp_path
+):
+    """A manifest without a complete recorded schema (written by older
+    code) makes a GET infer the key type from ONE bucket's footers, not
+    from every version group of the table."""
+    sink = BucketedParquetSink(spark, str(tmp_path / "legacy"), n_buckets=32)
+    shutil.copytree(versioned_sink.path, sink.path)
+    path = os.path.join(sink.path, table_commit.MANIFEST)
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema_complete"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    key = big_parsed.select("key").orderBy(F.desc("key")).limit(1).collect()[0][0]
+    got = []
+    jobs = _jobs_run_by(spark, lambda: got.extend(sink.lookup([key]).collect()))
+    assert [r["transaction_id"] for r in got] == [key]
+    # one inference for the key type, one for the probe bucket's group
+    assert len([j for j in jobs if _is_footer_inference(j)]) <= 2, jobs
