@@ -67,15 +67,6 @@ def _widened_schema_json(table: StructType, written: StructType) -> str:
     return StructType(written.fields + [f for f in table.fields if f.name not in have]).json()
 
 
-def _bucket_ids_in(vdir: str) -> list[int]:
-    """Bucket ids physically present in a version directory."""
-    return sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(vdir)
-        if e.startswith("_bucket=")
-    )
-
-
 def latest_per_key(
     events: DataFrame,
     key_col: str = "key",
@@ -125,15 +116,16 @@ class BucketedParquetSink:
     Stand-in for ``DeltaTable.merge`` (K2/K3: ``transaction_consumer.py:22-71``,
     ``:85-102``) that runs with zero extra dependencies.  Layout::
 
-        <path>/_CURRENT                     (manifest: live version + n_buckets)
+        <path>/_CURRENT                     (manifest: n_buckets, bucket map)
         <path>/v<seq>/_bucket=<i>/part-*.parquet
 
-    ``merge`` rewrites only buckets present in the incoming batch (dynamic
-    partition overwrite inside the live version dir — safe because the
-    streaming checkpoint + idempotent merge replays a torn batch).
-    Compaction and re-bucketing publish a whole NEW version directory and
-    flip the ``_CURRENT`` pointer atomically (see ``commit.py``), so
-    readers never observe a missing or half-swapped table.
+    ``merge`` stages only the buckets present in the incoming batch as a
+    NEW version dir; the manifest's bucket map (``commit.py`` owns its
+    format) points those buckets at it and keeps every other bucket on
+    the version that already serves it.  Compaction and re-bucketing
+    publish the same way, and every publish flips ``_CURRENT``
+    atomically, so readers never observe a missing or half-swapped
+    table.
 
     Merge I/O model (the 100 TB contract): a batch carrying K distinct
     keys touches ``E = n*(1-(1-1/n)^K) <= min(K, n)`` of the n buckets,
@@ -167,14 +159,22 @@ class BucketedParquetSink:
 
     _META_COLS = ("op", "__lsn", "__ts_ms", "_bucket")
 
-    def _manifest(self) -> dict | None:
-        return table_commit.read_manifest(self.path)
+    def _manifest(self, at_seq: int | None = None) -> dict | None:
+        """The live manifest, or the one published at ``at_seq`` (KeyError
+        past the grace window).  A manifest without a ``buckets`` map is
+        the flat layout and raises ValueError (``commit.bucket_map``)."""
+        if at_seq is None:
+            m = table_commit.read_manifest(self.path)
+        else:
+            m = table_commit.manifest_at(self.path, at_seq)
+        table_commit.bucket_map(self.path, m)
+        return m
 
     def current_n_buckets(self) -> int:
+        """Bucket count of the live layout; the creation seed until the
+        table exists."""
         m = self._manifest()
-        # .get: legacy manifests may predate the n_buckets key (the same
-        # fallback lookup() and merge() apply)
-        return m.get("n_buckets", self.n_buckets) if m else self.n_buckets
+        return m["n_buckets"] if m else self.n_buckets
 
     def data_dir(self) -> str | None:
         """Latest committed version dir (the newest data, not necessarily
@@ -188,8 +188,6 @@ class BucketedParquetSink:
             m = self._manifest()
         if not m:
             return 0
-        if "buckets" not in m:
-            return table_commit.dir_bytes(table_commit.resolve(self.path))
         return sum(
             table_commit.dir_bytes(f"{vdir}/_bucket={b}")
             for vdir, bids in table_commit.bucket_paths(self.path, m).items()
@@ -206,8 +204,8 @@ class BucketedParquetSink:
 
     def _schema(self, m: dict | None, buckets: list[int] | None = None) -> StructType:
         """Schema of snapshot ``m``: the manifest's record, or footer
-        inference through :meth:`read_raw` (over ``buckets``) for a legacy
-        manifest."""
+        inference through :meth:`read_raw` (over ``buckets``) for a
+        manifest without a ``schema_complete`` stamp."""
         seq = m["seq"] if m else None
         return _recorded_schema(m) or self.read_raw(buckets=buckets, at_seq=seq).schema
 
@@ -257,22 +255,20 @@ class BucketedParquetSink:
 
         if not keys:
             raise ValueError("lookup: need at least one key")
-        if at_seq is not None:
-            m = table_commit.manifest_at(self.path, at_seq)
-        else:
-            m = self._manifest()
-            if m is not None:
-                # pin the whole probe to THIS snapshot: n_buckets, the key
-                # type and the pruned read must resolve the SAME manifest —
-                # re-resolving the live pointer later would let a
-                # concurrent re-bucketing compaction commit in between,
-                # and the probe would prune the new layout with bucket ids
-                # hashed under the old count (silently empty results)
-                at_seq = m["seq"]
-        n = (m or {}).get("n_buckets", self.n_buckets)
-        # a legacy manifest infers the key type from ONE bucket's footers:
-        # a GET must not pay O(n_buckets) metadata I/O before any pruning
-        one = [int(next(iter(m["buckets"])))] if m and m.get("buckets") else None
+        m = self._manifest(at_seq)
+        if m is not None:
+            # pin the whole probe to THIS snapshot: n_buckets, the key
+            # type and the pruned read must resolve the SAME manifest —
+            # re-resolving the live pointer later would let a concurrent
+            # re-bucketing compaction commit in between, and the probe
+            # would prune the new layout with bucket ids hashed under the
+            # old count (silently empty results)
+            at_seq = m["seq"]
+        n = m["n_buckets"] if m else self.n_buckets
+        # an unstamped manifest infers the key type from ONE bucket's
+        # footers: a GET must not pay O(n_buckets) metadata I/O before any
+        # pruning
+        one = [int(next(iter(m["buckets"])))] if m and m["buckets"] else None
         ktype = self._schema(m, buckets=one)[self.key_col].dataType
         probe_keys = pa.array(keys)
         if isinstance(ktype, BinaryType) and not pa.types.is_binary(probe_keys.type):
@@ -311,30 +307,21 @@ class BucketedParquetSink:
 
         Every version group is read with the manifest's recorded schema:
         no footer-inference job, and buckets written before a schema
-        evolution read the evolved columns as nulls.  A legacy manifest
-        without one falls back to inference, unioned by name with null-fill.
+        evolution read the evolved columns as nulls.  A manifest without
+        the ``schema_complete`` stamp falls back to inference, unioned by
+        name with null-fill.  A manifest without a ``buckets`` map (the
+        flat layout) raises ValueError.
 
         ``at_seq`` reads the snapshot published at that commit instead of
         the live one — Delta/Iceberg-style time travel, bounded by the
         grace window (KeyError past it).
         """
-        if at_seq is not None:
-            m = table_commit.manifest_at(self.path, at_seq)
-        else:
-            m = self._manifest()
-        vdir_live = os.path.join(self.path, m["version"]) if m else None
-        if not m or "buckets" not in m:
-            # pre-manifest table (single live dir): runtime bucket filter
-            src = vdir_live or table_commit.resolve(self.path)
-            if src is None:
-                raise FileNotFoundError(
-                    f"sink table does not exist yet: {self.path!r} (no "
-                    "manifest and no version dir) — merge() a batch first"
-                )
-            df = self.spark.read.parquet(src)
-            if buckets is not None:
-                df = df.filter(F.col("_bucket").isin(list(buckets)))
-            return df
+        m = self._manifest(at_seq)
+        if m is None:
+            raise FileNotFoundError(
+                f"sink table does not exist yet: {self.path!r} (no manifest) — "
+                "merge() a batch first"
+            )
         schema = _recorded_schema(m)
         want = set(buckets) if buckets is not None else None
         parts = []
@@ -353,7 +340,7 @@ class BucketedParquetSink:
             schema = schema or _recorded_schema(m, partial_ok=True)
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
-            return self.spark.read.parquet(vdir_live).limit(0)
+            return self.spark.read.parquet(os.path.join(self.path, m["version"])).limit(0)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -467,7 +454,7 @@ class BucketedParquetSink:
         # mapping between the discovery read and the written _bucket
         # column (the race lookup() pins against).
         _m0 = self._manifest()
-        n0 = _m0.get("n_buckets", self.n_buckets) if _m0 else self.n_buckets
+        n0 = _m0["n_buckets"] if _m0 else self.n_buckets
         if _m0 is not None:
             stored_order = _m0.get("order_cols")
             if stored_order is not None and tuple(stored_order) != tuple(order_cols):
@@ -590,18 +577,10 @@ class BucketedParquetSink:
         # serving from theirs.  Readers that resolved the previous
         # manifest keep a consistent snapshot — no in-place rewrite,
         # no torn reads, portable to object stores.
-        old = _m0 or {}
-        old_map = old.get("buckets")
-        if old_map is None and old:
-            # legacy single-dir manifest (pre-map table or an old
-            # compaction): seed the map from the pinned version's layout
-            live = os.path.join(self.path, _m0["version"])
-            old_map = {str(b): os.path.basename(live) for b in _bucket_ids_in(live)}
         vdir, seq = table_commit.begin(self.path)
         bucketed.write.mode("overwrite").partitionBy("_bucket").parquet(vdir)
-        vname = os.path.basename(vdir)
-        written = _bucket_ids_in(vdir)
-        if not written and not old:
+        written = table_commit.staged_ids(vdir, "_bucket")
+        if not written and not _m0:
             # empty creation batch (possible now that streaming callers
             # skip the per-batch isEmpty() job): nothing to publish —
             # leave the table nonexistent rather than commit a
@@ -618,13 +597,14 @@ class BucketedParquetSink:
             # manifest.  Raising here aborts the commit.
             staged = self.spark.read.schema(bucketed.schema).parquet(vdir).drop("_bucket")
             pre_write(current_touched, staged)
-        bucket_map = {**(old_map or {}), **{str(b): vname for b in written}}
         table_commit.commit(
             self.path,
             seq,
             {
                 "n_buckets": n0,
-                "buckets": bucket_map,
+                "buckets": table_commit.next_bucket_map(
+                    table_commit.bucket_map(self.path, _m0), vdir, written, touched
+                ),
                 "order_cols": list(order_cols),
                 # the table schema rides in the manifest: every read uses
                 # it, and a fully-empty snapshot stays readable
@@ -682,7 +662,7 @@ def compact_sink(
     # one pinned manifest snapshot for the whole run (the merge()/lookup()
     # discipline); the commit CAS-es against it
     m = sink._manifest()
-    n_cur = m.get("n_buckets", sink.n_buckets) if m else sink.n_buckets
+    n_cur = m["n_buckets"] if m else sink.n_buckets
     n_new = n_cur
     if target_bucket_bytes:
         tbytes = sink.table_bytes(m=m)
@@ -696,15 +676,11 @@ def compact_sink(
         max_buckets is not None
         and n_new == n_cur
         and m is not None
-        and "buckets" in m
         and max_buckets < len(m["buckets"])
     )
-    chosen: list[int] = []
-    if partial:
-        # oldest-version-first: rewriting the buckets that still point into
-        # the oldest dirs is what lets GC collapse the version chain
-        by_age = sorted(m["buckets"].items(), key=lambda kv: (kv[1], int(kv[0])))
-        chosen = [int(b) for b, _ in by_age[:max_buckets]]
+    # oldest-version-first: rewriting the buckets that still point into
+    # the oldest dirs is what lets GC collapse the version chain
+    chosen = table_commit.oldest_buckets(m["buckets"])[:max_buckets] if partial else []
     kept = sink.read_raw(buckets=chosen if partial else None, at_seq=m["seq"] if m else None)
     kept = kept.filter(not_tombstone_to_purge).drop("_bucket")
     staged = kept.withColumn("_bucket", sink._bucket(n_new))
@@ -716,8 +692,9 @@ def compact_sink(
     # the superseded ones once the grace window passes.  A rewritten
     # bucket whose every row was a purged tombstone leaves the map — even
     # an EMPTY map stays readable: schema_json serves the zero-row frame.
-    bucket_map = {b: v for b, v in m["buckets"].items() if int(b) not in chosen} if partial else {}
-    bucket_map.update({str(b): os.path.basename(vdir) for b in _bucket_ids_in(vdir)})
+    bucket_map = table_commit.next_bucket_map(
+        m["buckets"] if partial else {}, vdir, table_commit.staged_ids(vdir, "_bucket"), chosen
+    )
     table_schema = sink._schema(m) if partial else StructType()
     meta = {
         "n_buckets": n_new,
@@ -743,10 +720,7 @@ AUTO_COMPACT_MAX_VERSIONS = 8
 
 
 def maybe_compact_sink(
-    sink: BucketedParquetSink,
-    purge_tombstones_through_lsn: int = -1,
-    max_versions: int = AUTO_COMPACT_MAX_VERSIONS,
-    max_buckets: int | None = None,
+    sink: BucketedParquetSink, max_versions: int = AUTO_COMPACT_MAX_VERSIONS
 ) -> bool:
     """Manifest-tracked compaction trigger: when the live bucket map spans
     more than ``max_versions`` version dirs, rewrite the buckets served
@@ -761,20 +735,14 @@ def maybe_compact_sink(
     before the next one.  The rewritten set is exactly the buckets
     pointing into the oldest excess versions, so one run restores the
     watermark while touching O(excess × bucket_bytes) data — never the
-    whole table.  The default purge bound (-1) purges no tombstones: the
-    safe tombstone horizon needs source knowledge (see ``compact_sink``),
-    and file-count hygiene must not wait for it."""
+    whole table.  It purges no tombstones (bound -1): the safe tombstone
+    horizon needs source knowledge (see ``compact_sink``), and file-count
+    hygiene must not wait for it; so it changes no logical row."""
     m = sink._manifest()
-    if not m or "buckets" not in m:
+    if not m or len(set(m["buckets"].values())) <= max_versions:
         return False
-    versions = sorted(set(m["buckets"].values()))
-    if len(versions) <= max_versions:
-        return False
-    if max_buckets is None:
-        low = max(1, max_versions // 2)
-        oldest = set(versions[: len(versions) - low + 1])
-        max_buckets = sum(1 for v in m["buckets"].values() if v in oldest)
-    compact_sink(sink, purge_tombstones_through_lsn, max_buckets=max_buckets)
+    chosen = table_commit.oldest_buckets(m["buckets"], max(1, max_versions // 2))
+    compact_sink(sink, -1, max_buckets=len(chosen))
     return True
 
 

@@ -20,6 +20,15 @@ grace window.
 
 The manifest carries arbitrary table metadata (e.g. the sink's bucket
 count), so metadata and data flip together in the same atomic commit.
+
+Bucket-mapped stores (the sink and the streaming state stores) keep a
+``buckets`` map in the manifest: bucket id -> the version dir serving
+it, so a commit rewrites only the buckets it touched.  This module owns
+that format: which ids a staging write produced (:func:`staged_ids`),
+the map after a publish (:func:`next_bucket_map`), which buckets a
+compaction rewrites to shorten the version chain
+(:func:`oldest_buckets`), and the refusal of a manifest without a map
+(:func:`bucket_map`).
 """
 
 from __future__ import annotations
@@ -29,6 +38,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterable
 
 MANIFEST = "_CURRENT"
 _HISTORY = "_history"
@@ -144,22 +154,14 @@ def begin(root: str) -> tuple[str, int]:
     return vdir, seq
 
 
-def _find_staged(root: str, seq: int) -> list[str]:
-    """Staging dirs allocated for ``seq`` (absolute paths)."""
-    try:
-        entries = os.listdir(root)
-    except FileNotFoundError:
-        return []
-    return sorted(os.path.join(root, e) for e in entries if _staged_seq(e) == seq)
-
-
 def commit(
     root: str,
     seq: int,
     meta: dict | None = None,
     keep: int = 1,
     expect_prev: int | None | object = _AUTO,
-    staged: str | None = None,
+    *,
+    staged: str,
     staged_ttl_seconds: float = _STAGED_TTL_SECONDS,
 ) -> None:
     """Atomically publish version ``seq`` and GC unreferenced versions
@@ -201,10 +203,9 @@ def commit(
     a loser's cleanup can only ever touch its OWN staging dir, never a
     winner's published version (the ADVICE r12 interleaving: two
     begin()s from the same snapshot, winner publishes, loser's failure
-    cleanup must not delete the winner's data).  When ``staged`` is
-    omitted (direct/legacy callers), the unique staging dir for ``seq``
-    is located by name; ambiguity (two in-flight writers on the same
-    seq) raises rather than guessing."""
+    cleanup must not delete the winner's data).  A ``buckets`` map built
+    before the commit names written buckets by the staging dir's name;
+    they are pointed at ``v<seq>`` here."""
     import fcntl
 
     os.makedirs(root, exist_ok=True)
@@ -215,48 +216,28 @@ def commit(
         prev_seq = None if prev is None else prev["seq"]
         if prev_seq != want_prev:
             # lost the race: remove this writer's own staged
-            # (never-published) dir, then fail loudly.  Only rm what we
-            # can POSITIVELY attribute to THIS writer — the dir it passed
-            # as ``staged``.  With staged omitted, a lone _find_staged
-            # candidate is NOT attribution: if this writer's dir was
-            # already reclaimed by staged-GC, the lone survivor belongs to
-            # a different in-flight writer and deleting it destroys that
-            # writer's in-progress data (ADVICE r13, low) — leave
-            # unattributed dirs for staged-GC.
-            if staged is not None:
-                shutil.rmtree(staged, ignore_errors=True)
+            # (never-published) dir, then fail loudly
+            shutil.rmtree(staged, ignore_errors=True)
             raise ConcurrentCommitError(
                 f"{root}: commit of seq {seq} expected live manifest seq "
                 f"{want_prev!r} but found {prev_seq!r} — another writer "
                 "committed in between; retry from a fresh snapshot"
             )
-        if staged is None:
-            found = _find_staged(root, seq)
-            if len(found) > 1:
-                raise ValueError(
-                    f"{root}: {len(found)} staging dirs for seq {seq} — "
-                    "concurrent writers must pass commit(..., staged=<their begin() dir>)"
-                )
-            staged = found[0] if found else None
         final = os.path.join(root, _vname(seq))
-        if staged is not None:
-            # CAS passed => no manifest at `seq` exists, so a leftover
-            # final dir is unpublished garbage (e.g. a pre-rename-scheme
-            # crash); clear it and take the name.
-            if os.path.lexists(final):
-                shutil.rmtree(final, ignore_errors=True)
-            os.rename(staged, final)
-            sbase = os.path.basename(staged)
-            if meta and isinstance(meta.get("buckets"), dict):
-                # bucket maps built pre-commit reference the staging
-                # name; point them at the published name
-                meta = {
-                    **meta,
-                    "buckets": {
-                        b: (_vname(seq) if v == sbase else v)
-                        for b, v in meta["buckets"].items()
-                    },
-                }
+        # CAS passed => no manifest at `seq` exists, so a leftover final
+        # dir is unpublished garbage (e.g. a pre-rename-scheme crash);
+        # clear it and take the name.
+        if os.path.lexists(final):
+            shutil.rmtree(final, ignore_errors=True)
+        os.rename(staged, final)
+        sbase = os.path.basename(staged)
+        if meta and isinstance(meta.get("buckets"), dict):
+            meta = {
+                **meta,
+                "buckets": {
+                    b: (_vname(seq) if v == sbase else v) for b, v in meta["buckets"].items()
+                },
+            }
         if prev is not None:
             _archive_manifest(root, prev)
         manifest = {"version": _vname(seq), "seq": seq, **(meta or {})}
@@ -410,13 +391,62 @@ def referenced_versions(manifest: dict) -> set[str]:
     }
 
 
+def bucket_map(root: str, manifest: dict | None) -> dict[str, str]:
+    """The manifest's ``buckets`` map; empty before the table exists.  A
+    live version without one is the earlier flat layout: reading through
+    the absent map would serve the table as empty and silently drop every
+    row it holds, so raise."""
+    if manifest is None:
+        return {}
+    if "buckets" not in manifest:
+        raise ValueError(
+            f"store {root!r} (manifest seq {manifest.get('seq')}) has no 'buckets' map: "
+            "it was written in the flat pre-bucket-map layout; rebuild it "
+            "in the bucket-mapped layout"
+        )
+    return manifest["buckets"]
+
+
 def bucket_paths(root: str, manifest: dict) -> dict[str, list[int]]:
     """Group the manifest's bucket map by version dir: absolute version
     path -> sorted bucket ids served from it."""
     groups: dict[str, list[int]] = {}
-    for bucket, vname in manifest.get("buckets", {}).items():
+    for bucket, vname in bucket_map(root, manifest).items():
         groups.setdefault(os.path.join(root, vname), []).append(int(bucket))
     return {v: sorted(bs) for v, bs in groups.items()}
+
+
+def staged_ids(staged: str, col: str) -> set[int]:
+    """Bucket ids a partitioned write into ``staged`` produced: its
+    ``<col>=<id>`` dirs (an id with no rows writes no dir)."""
+    prefix = f"{col}="
+    return {int(e[len(prefix) :]) for e in os.listdir(staged) if e.startswith(prefix)}
+
+
+def next_bucket_map(
+    buckets: dict[str, str], staged: str, written: set[int], touched: Iterable[int]
+) -> dict[str, str]:
+    """The bucket map after publishing ``staged``: ``written`` ids are
+    served from it, ids the write ``touched`` but left empty leave the
+    map (no dir would serve them), and every other id keeps its
+    version.  Written ids carry the staging name; commit() renames it."""
+    gone = {int(b) for b in touched} | set(written)
+    out = {b: v for b, v in buckets.items() if int(b) not in gone}
+    out.update({str(b): os.path.basename(staged) for b in sorted(written)})
+    return out
+
+
+def oldest_buckets(buckets: dict[str, str], to_versions: int = 0) -> list[int]:
+    """Bucket ids oldest version first (ties by id): the ids to rewrite
+    into ONE new version so the map spans at most ``to_versions`` version
+    dirs — empty when it already does.  The default ranks the whole map
+    (a caller rewriting the k oldest buckets takes a prefix)."""
+    versions = sorted(set(buckets.values()))
+    if len(versions) <= to_versions:
+        return []
+    oldest = set(versions[: len(versions) - to_versions + 1])
+    ranked = sorted(buckets.items(), key=lambda kv: (kv[1], int(kv[0])))
+    return [int(b) for b, v in ranked if v in oldest]
 
 
 def dir_bytes(path: str) -> int:

@@ -45,7 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
-from realtime_change_data_capture_streaming_spark.cdc.apply_changes import BucketedParquetSink
+from realtime_change_data_capture_streaming_spark.cdc.apply_changes import (
+    BucketedParquetSink,
+    maybe_compact_sink,
+)
 
 _VIEW_SCHEMA = "merchant_name string, n_txn bigint, sum_cents bigint"
 
@@ -198,12 +201,17 @@ def apply_changes_with_view(
     order_cols: tuple[str, ...] = ("lsn", "ts_ms"),
 ):
     """Streaming wiring: every micro-batch updates sink AND view in one
-    foreachBatch transaction scope (same checkpoint, same replay story)."""
+    foreachBatch transaction scope (same checkpoint, same replay story).
+    After each batch the sink's version chain is bounded the way
+    ``apply_changes_stream`` bounds it (``maybe_compact_sink``); that
+    compaction changes no logical row, so the view's delta log stays
+    exact."""
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
         # no isEmpty() pre-check (an extra parse job per micro-batch);
         # sink.merge no-ops empty batches internally
         view.process_batch(batch_df, order_cols, batch_id=batch_id)
+        maybe_compact_sink(view.sink)
 
     writer = (
         parsed.writeStream.foreachBatch(_step)

@@ -10,6 +10,7 @@ these for every headline query.
 from __future__ import annotations
 
 import re
+import warnings
 
 from pyspark.sql import DataFrame
 
@@ -100,13 +101,25 @@ def logical_shuffle_free(df: DataFrame) -> bool:
     return joins <= hints
 
 
-def _parse_bytes_conf(v: str, default: int) -> int:
+#: (key, value) byte confs already warned about as unparseable
+_WARNED_BYTES_CONFS: set[tuple[str, str]] = set()
+
+
+def _parse_bytes_conf(v: str, default: int, key: str) -> int:
     """Byte-size conf value to bytes, falling back to ``default`` on any
     spelling outside the integer-with-suffix form (fractional sizes,
     "auto", garbage): a conf a user tuned must never fail a QUERY BUILD
-    through this metadata helper (ADVICE r16)."""
+    through this metadata helper (ADVICE r16).  The fallback warns once
+    per ``key`` and value, so a mistyped setting does not go unnoticed."""
     m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", v.lower())
     if not m:
+        if (key, v) not in _WARNED_BYTES_CONFS:
+            _WARNED_BYTES_CONFS.add((key, v))
+            warnings.warn(
+                f"{key}={v!r} is not an integer byte size; partition estimates use "
+                f"{default} bytes instead",
+                stacklevel=2,
+            )
         return default
     return int(m.group(1)) * (1024 ** {"": 0, "k": 1, "m": 2, "g": 3, "t": 4, "p": 5}[m.group(2)])
 
@@ -140,10 +153,14 @@ def estimated_scan_partitions_ex(df: DataFrame) -> tuple[int, bool]:
 
     conf = df.sparkSession.conf
     max_pb = _parse_bytes_conf(
-        conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 * 1024 * 1024
+        conf.get("spark.sql.files.maxPartitionBytes", "128m"),
+        128 * 1024 * 1024,
+        "spark.sql.files.maxPartitionBytes",
     )
     open_cost = _parse_bytes_conf(
-        conf.get("spark.sql.files.openCostInBytes", "4m"), 4 * 1024 * 1024
+        conf.get("spark.sql.files.openCostInBytes", "4m"),
+        4 * 1024 * 1024,
+        "spark.sql.files.openCostInBytes",
     )
     jvm = df.sparkSession._jvm
     hconf = df.sparkSession._jsc.hadoopConfiguration()

@@ -1,11 +1,12 @@
-"""Shared manifest-driven read for bucket-mapped versioned stores.
+"""Spark-side reader and writers over ``cdc/commit.py``'s bucket-map format.
 
-``cdc/commit.py`` owns the manifest/GC semantics but is deliberately
-Spark-free; this is the one Spark-side reader for stores whose manifest
-``buckets`` map keys partition ids to version dirs (the ANN appended-code
-store, the CUSUM state store).  Optionally path-prunes to an id subset —
-reads touch only the partitions asked for, in whichever version dir each
-one is currently served from.
+``cdc/commit.py`` owns the manifest, the GC and the ``buckets`` map
+(partition id -> serving version dir) but is deliberately Spark-free;
+this module reads and writes partition-keyed streaming stores in that
+format (the ANN codes, CUSUM state, BM25 erased-set and near-dup
+stores).  Reads optionally path-prune to an id subset — they touch
+only the partitions asked for, in whichever version dir each one is
+currently served from.
 """
 
 from __future__ import annotations
@@ -25,21 +26,13 @@ def read_partitioned_store(
     """Rows of the live store snapshot, cast to ``schema`` (a DDL string
     whose column order is the output order), pruned at the PATH level to
     ``ids`` when given (the same ``basePath`` + explicit-dirs idiom as the
-    sink's ``read_raw``).  A manifest without a ``buckets`` map raises."""
+    sink's ``read_raw``).  A manifest without a ``buckets`` map raises
+    (``commit.bucket_map``)."""
     from pyspark.sql import functions as F
 
     m = table_commit.read_manifest(store)
     if not m:
         return spark.createDataFrame([], schema)
-    if "buckets" not in m:
-        # a live version but no bucket map: the earlier flat layout.  Read
-        # through the (absent) map it would serve as empty, silently
-        # dropping every row it holds
-        raise ValueError(
-            f"store {store!r} (manifest seq {m.get('seq')}) has no 'buckets' map: "
-            "it was written in the flat pre-bucket-map layout; rebuild it "
-            "in the bucket-mapped layout"
-        )
     want = {int(k) for k in ids} if ids is not None else None
     # Spark's own DDL parser, not string-splitting: parameterized types
     # (decimal(18,2), map<...>) contain commas/spaces a naive split mangles
@@ -85,28 +78,18 @@ def publish_bucketed_version(
     counters flip in ONE atomic manifest write.  Past ``max_versions``
     distinct dirs the version chain auto-compacts (without the bound the
     per-batch bucket rewrites grow the listing forever)."""
-    import os
-
     from pyspark.sql import functions as F
 
     m = table_commit.read_manifest(store)
-    buckets = dict(m.get("buckets", {})) if m else {}
     vdir, seq = table_commit.begin(store)
     rows.withColumn(part_col, F.pmod(F.col(id_col), F.lit(n_buckets))).write.mode(
         "overwrite"
     ).partitionBy(part_col).parquet(vdir)
-    written = {
-        int(e.split("=", 1)[1]) for e in os.listdir(vdir) if e.startswith(f"{part_col}=")
-    }
-    vname = os.path.basename(vdir)
-    for b in touched:
-        if int(b) in written:
-            buckets[str(b)] = vname
-        else:
-            buckets.pop(str(b), None)
+    buckets = table_commit.next_bucket_map(
+        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, part_col), touched
+    )
     table_commit.commit(store, seq, meta={**meta, "buckets": buckets}, staged=vdir)
-    m2 = table_commit.read_manifest(store)
-    if len(set(m2.get("buckets", {}).values())) > max_versions:
+    if len(set(buckets.values())) > max_versions:
         compact_bucketed_version(
             rows.sparkSession,
             store,
@@ -133,18 +116,12 @@ def compact_bucketed_version(
     O(excess buckets' bytes), never the whole store; serving rows
     unchanged).  Every non-structural manifest key (replay frontier,
     correction counters, ...) is carried forward unchanged."""
-    import os
-
     from pyspark.sql import functions as F
 
     m = table_commit.read_manifest(store)
-    if m is None or not m.get("buckets"):
+    chosen = table_commit.oldest_buckets(table_commit.bucket_map(store, m), to_versions)
+    if not chosen:
         return
-    versions = sorted(set(m["buckets"].values()))
-    if len(versions) <= to_versions:
-        return
-    oldest = set(versions[: max(1, len(versions) - to_versions + 1)])
-    chosen = sorted(int(b) for b, v in m["buckets"].items() if v in oldest)
     rows = read_partitioned_store(sp, store, part_col, schema, ids=chosen).localCheckpoint(
         eager=True
     )
@@ -152,16 +129,8 @@ def compact_bucketed_version(
     rows.withColumn(part_col, F.pmod(F.col(id_col), F.lit(n_buckets))).write.mode(
         "overwrite"
     ).partitionBy(part_col).parquet(vdir)
-    written = {
-        int(e.split("=", 1)[1]) for e in os.listdir(vdir) if e.startswith(f"{part_col}=")
-    }
-    vname = os.path.basename(vdir)
-    buckets = dict(m["buckets"])
-    for b in chosen:
-        if b in written:
-            buckets[str(b)] = vname
-        else:
-            buckets.pop(str(b), None)
     meta = {k: v for k, v in m.items() if k not in ("version", "seq", "buckets")}
-    meta["buckets"] = buckets
+    meta["buckets"] = table_commit.next_bucket_map(
+        m["buckets"], vdir, table_commit.staged_ids(vdir, part_col), chosen
+    )
     table_commit.commit(store, seq, meta=meta, staged=vdir)

@@ -172,14 +172,13 @@ def _append_codes(store: str, batch_codes: DataFrame, bid: int) -> None:
     if not touched:
         return
     m = table_commit.read_manifest(store)
-    buckets = dict(m.get("buckets", {})) if m else {}
     prev_touched = _read_store(sp, store, clusters=touched)
     rows = prev_touched.unionByName(codes_b)
     vdir, seq = table_commit.begin(store)
     rows.write.mode("overwrite").partitionBy("cluster").parquet(vdir)
-    vname = os.path.basename(vdir)
-    for c in touched:
-        buckets[str(c)] = vname
+    buckets = table_commit.next_bucket_map(
+        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "cluster"), touched
+    )
     # carry the refit state through: an append after a partial refit must
     # not reset the refit replay guard, drop the per-cluster generation
     # map, or unpin the committed codebooks (commit() replaces meta
@@ -195,10 +194,9 @@ def _append_codes(store: str, batch_codes: DataFrame, bid: int) -> None:
     # once the cluster map spans too many version dirs, collapse the
     # OLDEST part of the chain down to the half-bound watermark (the
     # sink trigger's hysteresis — compacting back to exactly the bound
-    # would re-trip every append).  One manifest read decides; serving
+    # would re-trip every append).  The map just committed decides; serving
     # state is unchanged.
-    m2 = table_commit.read_manifest(store)
-    if len(set(m2.get("buckets", {}).values())) > ANN_AUTO_COMPACT_MAX_VERSIONS:
+    if len(set(buckets.values())) > ANN_AUTO_COMPACT_MAX_VERSIONS:
         compact_ann_store(sp, store, to_versions=max(1, ANN_AUTO_COMPACT_MAX_VERSIONS // 2))
 
 
@@ -268,43 +266,27 @@ def compact_ann_store(
     per batch; serving never depends on it (the serve-time anti-join
     stays authoritative)."""
     m = table_commit.read_manifest(store)
-    if m is None or not m.get("buckets"):
+    if m is None:
         return
-    versions = sorted(set(m["buckets"].values()))
     erased = _read_erased_vecs(spark, erased_root) if erased_root is not None else None
-    if len(versions) <= to_versions and erased is None:
-        # already at (or under) the target — a standalone full collapse
-        # (to_versions=1) on a single-version store was still doing a
-        # full rewrite + commit for nothing (ADVICE r14): version dirs
-        # are immutable, so a 1-version store IS its own collapse.  A
-        # purge run (erased set present) must still rewrite.
+    # a purge run rewrites every cluster; otherwise only the oldest
+    # excess versions', and a store already at (or under) the target is
+    # its own collapse (version dirs are immutable; ADVICE r14)
+    chosen = table_commit.oldest_buckets(
+        table_commit.bucket_map(store, m), 0 if erased is not None else to_versions
+    )
+    if not chosen:
         return
-    if erased is not None:
-        chosen = sorted(int(c) for c in m["buckets"])
-    else:
-        oldest = set(versions[: max(1, len(versions) - to_versions + 1)])
-        chosen = sorted(int(c) for c, v in m["buckets"].items() if v in oldest)
     rows = _read_store(spark, store, clusters=chosen)
     if erased is not None:
         rows = rows.join(F.broadcast(erased), "vec_id", "left_anti")
     rows = rows.localCheckpoint(eager=True)
     vdir, seq = table_commit.begin(store)
     rows.write.mode("overwrite").partitionBy("cluster").parquet(vdir)
-    vname = os.path.basename(vdir)
-    buckets = dict(m["buckets"])
-    if erased is not None:
-        # a fully-purged cluster writes no partition dir; its bucket
-        # entry must go, not dangle at a path that does not exist
-        # (bounded collect: <= k cluster ids, model-state scale)
-        kept = {int(r["cluster"]) for r in rows.select("cluster").distinct().collect()}
-        for c in chosen:
-            if c in kept:
-                buckets[str(c)] = vname
-            else:
-                buckets.pop(str(c), None)
-    else:
-        for c in chosen:
-            buckets[str(c)] = vname
+    # a fully-purged cluster writes no partition dir, so it leaves the map
+    buckets = table_commit.next_bucket_map(
+        m["buckets"], vdir, table_commit.staged_ids(vdir, "cluster"), chosen
+    )
     meta = {"buckets": buckets}
     for k in ("applied_bid",) + _REFIT_META_KEYS:
         if k in m:
@@ -603,12 +585,13 @@ def _rewrite_refit_clusters(
     sp = new_codes.sparkSession
     rows = new_codes.select("vec_id", "s", "code", "cluster").localCheckpoint(eager=True)
     m = table_commit.read_manifest(store)
-    buckets = dict(m.get("buckets", {})) if m else {}
     gens = dict(m.get("cluster_gen", {})) if m else {}
     members = dict(m.get("refit_members", {})) if m else {}
     vdir, seq = table_commit.begin(store)
     rows.write.mode("overwrite").partitionBy("cluster").parquet(vdir)
-    vname = os.path.basename(vdir)
+    buckets = table_commit.next_bucket_map(
+        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "cluster"), tripped
+    )
     if cb_local is not None:
         prev_cb = _load_local_cb(sp, store)
         cb_all = cb_local.select("cluster", "s", "code", "cw")
@@ -623,7 +606,6 @@ def _rewrite_refit_clusters(
     ):
         members[str(r["cluster"])] = int(r["n"])
     for c in tripped:
-        buckets[str(c)] = vname
         gens[str(c)] = int(gens.get(str(c), 0)) + 1
     meta = {
         "refit_bid": bid,

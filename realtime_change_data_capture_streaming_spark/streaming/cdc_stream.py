@@ -457,23 +457,12 @@ def _txn_pend_rewrite(store: str, keep: DataFrame, touched: list, bid: int) -> N
     whose every transaction completed drops out of the map entirely."""
     rows = keep.localCheckpoint(eager=True)
     m = table_commit.read_manifest(store)
-    buckets = dict(m.get("buckets", {})) if m else {}
     vdir, seq = table_commit.begin(store)
     rows.write.mode("overwrite").partitionBy("tb").parquet(vdir)
-    vname = os.path.basename(vdir)
-    written = {
-        int(e.split("=", 1)[1])
-        for e in os.listdir(vdir)
-        if e.startswith("tb=")
-    }
-    for t in touched:
-        if int(t) in written:
-            buckets[str(t)] = vname
-        else:
-            buckets.pop(str(t), None)  # bucket fully drained
-    table_commit.commit(
-        store, seq, meta={"applied_bid": bid, "buckets": buckets}, staged=vdir
+    buckets = table_commit.next_bucket_map(
+        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "tb"), touched
     )
+    table_commit.commit(store, seq, meta={"applied_bid": bid, "buckets": buckets}, staged=vdir)
 
 
 from realtime_change_data_capture_streaming_spark.cdc.queries import CDC_TXN_APPLY_SQL  # noqa: E402

@@ -43,8 +43,6 @@ data-quality extension, streaming tier.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -212,12 +210,11 @@ def _commit_state(store: str, touched_state: DataFrame, bid: int, touched: list[
         return
     new_rows = touched_state.localCheckpoint(eager=True)
     m = table_commit.read_manifest(store)
-    buckets = dict(m.get("buckets", {})) if m else {}
     vdir, seq = table_commit.begin(store)
     new_rows.write.mode("overwrite").partitionBy("day_key").parquet(vdir)
-    vname = os.path.basename(vdir)
-    for k in touched:
-        buckets[str(k)] = vname
+    buckets = table_commit.next_bucket_map(
+        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "day_key"), touched
+    )
     table_commit.commit(store, seq, meta={"applied_bid": bid, "buckets": buckets}, staged=vdir)
 
 

@@ -61,11 +61,6 @@ REGISTRY: dict[tuple[str, str], tuple[int, str]] = {
         "refit-time member count per tripped cluster — <= n_ivf_clusters rows "
         "(the staleness-reset anchor the next round reads from the manifest)",
     ),
-    ("streaming/ann_maintain.py", "compact_ann_store"): (
-        1,
-        "surviving-cluster id set after an erasure purge — <= n_ivf_clusters "
-        "rows (prunes fully-purged clusters from the bucket map)",
-    ),
     ("streaming/ann_maintain.py", "_serve_adc_mixed"): (
         1,
         "probe ranking rows — N_QUERY_VECS * N_PROBE, model-state scale "

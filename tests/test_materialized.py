@@ -105,3 +105,50 @@ def test_delta_slot_durable_before_sink_write(spark):
     import os as _os
 
     assert sorted(e for e in _os.listdir(vdir) if e.startswith("b=")) == ["b=0"]
+
+
+def test_view_stream_bounds_sink_version_chain(spark, tmp_path, monkeypatch):
+    """apply_changes_with_view bounds the sink's version chain the way
+    apply_changes_stream does: past a (here lowered) bound the batch's
+    merge is followed by a compaction, and because that compaction
+    changes no logical row the view still equals the batch oracle."""
+    from realtime_change_data_capture_streaming_spark.cdc import apply_changes as ac
+    from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
+    from realtime_change_data_capture_streaming_spark.cdc import materialized as mv
+    from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import (
+        stage_ordered_batches,
+    )
+
+    # disjoint key slices over 64 buckets: each batch touches buckets the
+    # others barely share, so without compaction the chain grows
+    raw = synthetic_change_events(spark, 60, updates_per_key=1, delete_every=7, seed=7)
+    frames = [
+        raw.filter(F.pmod(F.crc32(F.col("key")), F.lit(6)) == i).select("key", "value")
+        for i in range(6)
+    ]
+    in_dir = stage_ordered_batches(frames, str(tmp_path / "staged"))
+    trips = []
+    monkeypatch.setattr(
+        mv, "maybe_compact_sink", lambda s: trips.append(ac.maybe_compact_sink(s, max_versions=2))
+    )
+    stream = (
+        spark.readStream.schema("key string, value string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    sink = BucketedParquetSink(spark, str(tmp_path / "sink"), n_buckets=64)
+    view = IncrementalAggView(spark, sink, str(tmp_path / "view"))
+    q = apply_changes_with_view(
+        parse_envelope(stream), view, str(tmp_path / "ckpt"), trigger={"availableNow": True}
+    )
+    q.awaitTermination(300)
+
+    assert len(trips) == 6 and any(trips), trips
+    m = table_commit.read_manifest(sink.path)
+    assert len(set(m["buckets"].values())) <= 2, m["buckets"]
+    final = ac.apply_changes_batch(parse_envelope(raw.select("key", "value")))
+    oracle = final.groupBy("merchant_name").agg(
+        F.count(F.lit(1)).alias("n_txn"),
+        F.sum((F.col("amount") * 100).cast("bigint")).alias("sum_cents"),
+    )
+    assert _state(view.read()) == _state(oracle)

@@ -697,8 +697,26 @@ def test_parse_bytes_conf_falls_back_instead_of_failing_the_build(spark):
     default."""
     from realtime_change_data_capture_streaming_spark.plans.introspect import _parse_bytes_conf
 
-    assert _parse_bytes_conf("128m", 7) == 128 * 1024 * 1024
-    assert _parse_bytes_conf("64b", 7) == 64
-    assert _parse_bytes_conf("1.5g", 7) == 7
-    assert _parse_bytes_conf("auto", 7) == 7
-    assert _parse_bytes_conf("", 7) == 7
+    key = "spark.sql.files.maxPartitionBytes"
+    assert _parse_bytes_conf("128m", 7, key) == 128 * 1024 * 1024
+    assert _parse_bytes_conf("64b", 7, key) == 64
+    assert _parse_bytes_conf("1.5g", 7, key) == 7
+    assert _parse_bytes_conf("auto", 7, key) == 7
+    assert _parse_bytes_conf("", 7, key) == 7
+
+
+def test_parse_bytes_conf_warns_once_naming_key_and_value():
+    """A mistyped byte-size conf still falls back without raising, but
+    says so once, naming the key and the rejected value."""
+    import warnings
+
+    from realtime_change_data_capture_streaming_spark.plans.introspect import _parse_bytes_conf
+
+    key = "spark.sql.files.testOnlyBytes"
+    with warnings.catch_warnings(record=True) as got:
+        warnings.simplefilter("always")
+        assert _parse_bytes_conf("12x8m", 7, key) == 7
+        assert _parse_bytes_conf("12x8m", 7, key) == 7
+        assert _parse_bytes_conf("64m", 7, key) == 64 * 1024 * 1024
+    assert len(got) == 1, [str(w.message) for w in got]
+    assert key in str(got[0].message) and "'12x8m'" in str(got[0].message)

@@ -632,11 +632,11 @@ def test_concurrent_commit_loses_loudly(tmp_path):
 
     root = str(tmp_path / "t")
     vdir0, seq0 = tc.begin(root)
-    tc.commit(root, seq0, meta={"x": 1})
+    tc.commit(root, seq0, meta={"x": 1}, staged=vdir0)
 
     # both writers snapshot seq0 and stage "the next" version
     vdir_a, seq_a = tc.begin(root)
-    tc.commit(root, seq_a, meta={"x": "a"}, expect_prev=seq0)
+    tc.commit(root, seq_a, meta={"x": "a"}, expect_prev=seq0, staged=vdir_a)
     vdir_b, seq_b = tc.begin(root)  # allocated AFTER a's commit
     with pytest.raises(tc.ConcurrentCommitError):
         # b's work was computed against seq0 — the CAS must reject it
@@ -646,35 +646,67 @@ def test_concurrent_commit_loses_loudly(tmp_path):
     assert not os.path.exists(vdir_b), "loser's staged dir not cleaned up"
 
 
-def test_cas_failure_without_staged_leaves_other_writers_dirs(tmp_path):
-    """ADVICE r13 (low): a loser that cannot attribute a staging dir to
-    itself (staged omitted) must NOT delete the lone candidate — it may
-    belong to a different in-flight writer whose own dir is still being
-    written.  Unattributed dirs are staged-GC's job."""
+def test_bucket_map_rule_and_staging_rename(tmp_path):
+    """commit.py's bucket-map format, without Spark: written ids point at
+    the staged version, ids a write touched but left empty leave the map,
+    untouched ids keep their version, and commit() renames the staging
+    name in the map to the published ``v<seq>``."""
     from realtime_change_data_capture_streaming_spark.cdc import commit as tc
 
     root = str(tmp_path / "t")
     vdir0, seq0 = tc.begin(root)
-    tc.commit(root, seq0, meta={"x": 0}, staged=vdir0)
+    for b in range(4):
+        os.makedirs(os.path.join(vdir0, f"_bucket={b}"))
+    written0 = tc.staged_ids(vdir0, "_bucket")
+    assert written0 == {0, 1, 2, 3}
+    tc.commit(root, seq0, meta={"buckets": tc.next_bucket_map({}, vdir0, written0, [])}, staged=vdir0)
 
-    # writer A advances the table; writer B (snapshot seq0) will lose.
-    # B's own staging dir was "already reclaimed" (simulated by rmtree);
-    # the only staging dir left at B's seq belongs to in-flight writer C.
-    vdir_a, seq_a = tc.begin(root)
-    vdir_b, seq_b = tc.begin(root)
-    vdir_c, seq_c = tc.begin(root)
-    assert seq_b == seq_c
-    with open(os.path.join(vdir_c, "data.txt"), "w") as f:
-        f.write("c-in-flight")
-    tc.commit(root, seq_a, meta={"x": "a"}, expect_prev=seq0, staged=vdir_a)
-    import shutil
+    vdir1, seq1 = tc.begin(root)
+    for b in (1, 4):
+        os.makedirs(os.path.join(vdir1, f"_bucket={b}"))
+    open(os.path.join(vdir1, "_SUCCESS"), "w").close()
+    written1 = tc.staged_ids(vdir1, "_bucket")
+    assert written1 == {1, 4}
+    staged_map = tc.next_bucket_map(tc.read_manifest(root)["buckets"], vdir1, written1, [1, 2])
+    sname = os.path.basename(vdir1)
+    assert staged_map == {"0": "v00000000", "1": sname, "3": "v00000000", "4": sname}
+    tc.commit(root, seq1, meta={"buckets": staged_map}, staged=vdir1)
+    m1 = tc.read_manifest(root)
+    assert m1["buckets"] == {"0": "v00000000", "1": "v00000001", "3": "v00000000", "4": "v00000001"}
+    assert tc.bucket_paths(root, m1) == {
+        os.path.join(root, "v00000000"): [0, 3],
+        os.path.join(root, "v00000001"): [1, 4],
+    }
 
-    shutil.rmtree(vdir_b)  # B's dir already gone (e.g. staged-GC)
-    with pytest.raises(tc.ConcurrentCommitError):
-        tc.commit(root, seq_b, meta={"x": "b"}, expect_prev=seq0)  # staged=None
-    assert os.path.isdir(vdir_c), "loser deleted another writer's in-progress dir"
-    with open(os.path.join(vdir_c, "data.txt")) as f:
-        assert f.read() == "c-in-flight"
+    # the collapse choice: oldest version first, ties by id
+    chain = {"0": "v00000002", "1": "v00000000", "2": "v00000001", "3": "v00000000"}
+    assert tc.oldest_buckets(chain, 3) == []
+    assert tc.oldest_buckets(chain, 2) == [1, 3, 2]
+    assert tc.oldest_buckets(chain) == [1, 3, 2, 0]
+
+
+def test_flat_layout_sink_raises(spark, tmp_path):
+    """A sink manifest with a live version but no bucket map (the flat
+    layout) must raise on every entry point rather than be read: the
+    bucket count and the serving versions it would have to guess decide
+    which stored row a key's merge supersedes."""
+    root = str(tmp_path / "flat")
+    staged, seq = table_commit.begin(root)
+    rows = spark.createDataFrame(
+        [("k1", "c", 1, 1, 0)], "key string, op string, __lsn long, __ts_ms long, _bucket int"
+    )
+    rows.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
+    table_commit.commit(root, seq, meta={"n_buckets": 4}, staged=staged)
+    sink = BucketedParquetSink(spark, root, n_buckets=4)
+    events = parse_envelope(synthetic_change_events(spark, 4, seed=3), decimal_mode="string")
+    for call in (
+        lambda: sink.read(),
+        lambda: sink.lookup(["k1"]),
+        lambda: sink.merge(events),
+        lambda: compact_sink(sink, purge_tombstones_through_lsn=0),
+    ):
+        with pytest.raises(ValueError, match="no 'buckets' map"):
+            call()
 
 
 def test_staged_gc_reclaims_doomed_dirs_by_age(tmp_path):
