@@ -628,6 +628,7 @@ def compact_sink(
     purge_tombstones_through_lsn: int,
     target_bucket_bytes: int | None = None,
     max_buckets: int | None = None,
+    buckets: list[int] | None = None,
 ) -> None:
     """Housekeeping job: rewrite table buckets dropping tombstones whose
     lsn is at or below the given bound, and optionally re-bucket toward a
@@ -651,9 +652,11 @@ def compact_sink(
     compaction is a full-table rewrite in one transaction; a nightly
     ``max_buckets=k`` run amortizes the same housekeeping.  Untouched
     buckets keep serving byte-identical files from their versions.
-    Re-bucketing changes the key→bucket mapping globally, so when
-    ``target_bucket_bytes`` demands a new count the rewrite must be full
-    and ``max_buckets`` is ignored for that run.
+    ``buckets`` names the ids to rewrite instead (``maybe_compact_sink``
+    passes the shared chain policy's choice).  Re-bucketing changes the
+    key→bucket mapping globally, so when ``target_bucket_bytes`` demands
+    a new count the rewrite must be full and ``max_buckets``/``buckets``
+    are ignored for that run.
 
     Every rewrite stages a new version directory and publishes it with one
     atomic pointer flip (``commit.py``) — concurrent readers keep the
@@ -672,15 +675,17 @@ def compact_sink(
     not_tombstone_to_purge = ~(
         (F.col("op") == "d") & (F.col("__lsn") <= F.lit(purge_tombstones_through_lsn))
     )
+    if buckets is None and max_buckets is not None and m is not None:
+        # oldest-version-first: rewriting the buckets that still point
+        # into the oldest dirs is what lets GC collapse the version chain
+        buckets = table_commit.oldest_buckets(m["buckets"])[:max_buckets]
     partial = (
-        max_buckets is not None
+        buckets is not None
         and n_new == n_cur
         and m is not None
-        and max_buckets < len(m["buckets"])
+        and len(buckets) < len(m["buckets"])
     )
-    # oldest-version-first: rewriting the buckets that still point into
-    # the oldest dirs is what lets GC collapse the version chain
-    chosen = table_commit.oldest_buckets(m["buckets"])[:max_buckets] if partial else []
+    chosen = buckets if partial else []
     kept = sink.read_raw(buckets=chosen if partial else None, at_seq=m["seq"] if m else None)
     kept = kept.filter(not_tombstone_to_purge).drop("_bucket")
     staged = kept.withColumn("_bucket", sink._bucket(n_new))
@@ -709,40 +714,25 @@ def compact_sink(
     )
 
 
-#: auto-compaction bound for the streaming merge loop: once the sink's
-#: bucket map references more than this many distinct version dirs, the
-#: loop runs an incremental ``compact_sink`` that rewrites exactly the
-#: buckets pinning the oldest versions, restoring the bound in one run.
-#: Every merge adds a version; without a wired trigger the chain (and the
-#: per-read manifest resolution + GC scan) grows with stream lifetime
-#: (VERDICT r13 task 4).  The check is one manifest JSON read per batch.
-AUTO_COMPACT_MAX_VERSIONS = 8
+def maybe_compact_sink(sink: BucketedParquetSink) -> bool:
+    """Manifest-tracked compaction trigger: when ``commit.chain_collapse``
+    (the one version-chain bound every bucket-mapped table shares) names
+    buckets due for collapse, rewrite exactly those
+    (``compact_sink(buckets=...)``), so the chain drops to the bound's
+    half-way watermark; otherwise do nothing.  Returns whether a
+    compaction ran.  The check is one manifest JSON read.
 
-
-def maybe_compact_sink(
-    sink: BucketedParquetSink, max_versions: int = AUTO_COMPACT_MAX_VERSIONS
-) -> bool:
-    """Manifest-tracked compaction trigger: when the live bucket map spans
-    more than ``max_versions`` version dirs, rewrite the buckets served
-    from the oldest versions (``compact_sink(max_buckets=...)``) so the
-    chain collapses to the LOW watermark ``max(1, max_versions // 2)``;
-    otherwise do nothing.  Returns whether a compaction ran.
-
-    Hysteresis is load-bearing: compacting back to exactly the bound
-    would re-trip on the very next merge (every merge adds a version) and
-    turn the trigger into a per-batch table rewrite; the half-bound
-    watermark means a trip buys ``max_versions - low`` quiet merges
-    before the next one.  The rewritten set is exactly the buckets
-    pointing into the oldest excess versions, so one run restores the
-    watermark while touching O(excess × bucket_bytes) data — never the
-    whole table.  It purges no tombstones (bound -1): the safe tombstone
-    horizon needs source knowledge (see ``compact_sink``), and file-count
-    hygiene must not wait for it; so it changes no logical row."""
+    The rewritten set is the buckets of the versions serving the fewest
+    buckets, so one run restores the watermark while touching the
+    smallest versions' data — never the whole table.  It purges
+    no tombstones (bound -1): the safe tombstone horizon needs source
+    knowledge (see ``compact_sink``), and file-count hygiene must not
+    wait for it; so it changes no logical row."""
     m = sink._manifest()
-    if not m or len(set(m["buckets"].values())) <= max_versions:
+    chosen = table_commit.chain_collapse(m["buckets"]) if m else []
+    if not chosen:
         return False
-    chosen = table_commit.oldest_buckets(m["buckets"], max(1, max_versions // 2))
-    compact_sink(sink, -1, max_buckets=len(chosen))
+    compact_sink(sink, -1, buckets=chosen)
     return True
 
 
@@ -752,7 +742,6 @@ def apply_changes_stream(
     checkpoint_dir: str,
     trigger: dict | None = None,
     order_cols: tuple[str, ...] = ("lsn", "ts_ms"),
-    auto_compact_max_versions: int | None = AUTO_COMPACT_MAX_VERSIONS,
 ):
     """Streaming apply-changes: parsed change stream -> keyed sink.
 
@@ -761,9 +750,9 @@ def apply_changes_stream(
     (``transaction_consumer.py:10``) with per-micro-batch transactions
     instead of its 1-commit-per-message (``:103``).
 
-    ``auto_compact_max_versions`` bounds the sink's version-chain length
-    across the stream's lifetime (``maybe_compact_sink`` after each
-    merge); pass None to leave housekeeping to an external job.
+    Every merge is followed by ``maybe_compact_sink``, so the sink's
+    version chain stays within ``commit.py``'s bound for the stream's
+    lifetime.
     """
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -771,8 +760,7 @@ def apply_changes_stream(
         # extra job every micro-batch; merge() itself no-ops empty batches
         # from the same job that fills its cache
         sink.merge(batch_df, order_cols)
-        if auto_compact_max_versions is not None:
-            maybe_compact_sink(sink, max_versions=auto_compact_max_versions)
+        maybe_compact_sink(sink)
 
     writer = (
         parsed.writeStream.foreachBatch(_merge)

@@ -25,10 +25,11 @@ Bucket-mapped stores (the sink and the streaming state stores) keep a
 ``buckets`` map in the manifest: bucket id -> the version dir serving
 it, so a commit rewrites only the buckets it touched.  This module owns
 that format: which ids a staging write produced (:func:`staged_ids`),
-the map after a publish (:func:`next_bucket_map`), which buckets a
-compaction rewrites to shorten the version chain
-(:func:`oldest_buckets`), and the refusal of a manifest without a map
-(:func:`bucket_map`).
+the map after a publish (:func:`next_bucket_map`), the oldest-first
+bucket order a partial compaction rewrites in (:func:`oldest_buckets`),
+the one chain bound every bucket-mapped writer asks
+(:func:`chain_collapse`), and the refusal of a manifest
+without a map (:func:`bucket_map`).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from collections.abc import Iterable
 
 MANIFEST = "_CURRENT"
@@ -436,17 +438,43 @@ def next_bucket_map(
     return out
 
 
-def oldest_buckets(buckets: dict[str, str], to_versions: int = 0) -> list[int]:
-    """Bucket ids oldest version first (ties by id): the ids to rewrite
-    into ONE new version so the map spans at most ``to_versions`` version
-    dirs — empty when it already does.  The default ranks the whole map
-    (a caller rewriting the k oldest buckets takes a prefix)."""
-    versions = sorted(set(buckets.values()))
-    if len(versions) <= to_versions:
-        return []
-    oldest = set(versions[: len(versions) - to_versions + 1])
+def oldest_buckets(buckets: dict[str, str]) -> list[int]:
+    """Bucket ids oldest version first (ties by id): the order in which
+    rewriting buckets into ONE new version shortens the version chain (a
+    caller rewriting the k oldest buckets takes a prefix)."""
     ranked = sorted(buckets.items(), key=lambda kv: (kv[1], int(kv[0])))
-    return [int(b) for b, v in ranked if v in oldest]
+    return [int(b) for b, _v in ranked]
+
+
+#: version-chain bound for every bucket-mapped table: each publish adds
+#: a version dir that untouched buckets keep alive, so without a bound
+#: the listing, the per-read manifest resolution and the GC scan grow
+#: with the table's lifetime.
+MAX_CHAIN_VERSIONS = 8
+
+
+def chain_collapse(buckets: dict[str, str]) -> list[int]:
+    """The bucket ids due for collapse: empty while the map spans at most
+    :data:`MAX_CHAIN_VERSIONS` version dirs; above it, the buckets of the
+    versions serving the FEWEST buckets (oldest first among equals), so
+    rewriting them into ONE new version leaves the map spanning half the
+    bound.  The half-bound watermark is the hysteresis: collapsing back
+    to exactly the bound would re-trip on the very next publish (every
+    publish adds a version) and turn compaction into a per-batch
+    rewrite.  Fewest-first, not oldest-first: a collapse's output is a
+    large version that every later publish is newer than, so an
+    oldest-first pick takes it again at each trip, and a table whose
+    buckets are mostly written once (CUSUM's day partitions, a sink fed
+    small batches) would rewrite its whole history every few publishes.
+    Fewest-first leaves the large versions alone and merges the small
+    recent ones."""
+    versions = set(buckets.values())
+    if len(versions) <= MAX_CHAIN_VERSIONS:
+        return []
+    served = Counter(buckets.values())
+    ranked = sorted(versions, key=lambda v: (served[v], v))
+    due = set(ranked[: len(versions) - MAX_CHAIN_VERSIONS // 2 + 1])
+    return [b for b in oldest_buckets(buckets) if buckets[str(b)] in due]
 
 
 def dir_bytes(path: str) -> int:

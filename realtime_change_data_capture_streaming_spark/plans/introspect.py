@@ -135,12 +135,12 @@ def estimated_scan_partitions_ex(df: DataFrame) -> tuple[int, bool]:
     Spark's own file-split packing formula over the leaf relations'
     files (``(bytes + n_files * openCostInBytes) / maxPartitionBytes``),
     plus any Range leaf's declared split count.  Metadata only — file
-    listing via ``inputFiles()`` and a stat per file, no job, no
-    physical planning.
+    listing via ``inputFiles()``, no job, no physical planning.
 
     Returns ``(estimate, all_statable)``.  Local paths stat through the
-    OS; every other URI stats through the JVM Hadoop ``FileSystem`` for
-    its scheme (HDFS/S3/...), so the estimate no longer collapses to
+    OS; every other URI is sized through the JVM Hadoop ``FileSystem``
+    for its scheme (HDFS/S3/...) by ONE ``listStatus`` per distinct
+    parent dir, not one ``getFileStatus`` RPC per file, so the estimate no longer collapses to
     ~n_files/32 of reality off the local disk (ADVICE r16).  A file
     neither can stat contributes only its open cost and flips
     ``all_statable`` to False — each call site must then take ITS
@@ -167,6 +167,7 @@ def estimated_scan_partitions_ex(df: DataFrame) -> tuple[int, bool]:
     total = 0
     n_files = 0
     all_statable = True
+    remote: dict[str, tuple[object, list[str]]] = {}  # dir -> (Hadoop Path, file names)
     for uri in df.inputFiles():
         n_files += 1
         scheme = urlparse(uri).scheme
@@ -177,12 +178,24 @@ def estimated_scan_partitions_ex(df: DataFrame) -> tuple[int, bool]:
             except OSError:
                 all_statable = False  # listed-then-vanished local file
                 continue
+        jpath = jvm.org.apache.hadoop.fs.Path(uri)
+        jdir = jpath.getParent()
+        remote.setdefault(jdir.toString(), (jdir, []))[1].append(jpath.getName())
+    for jdir, names in remote.values():
+        # one listing per parent dir, not one stat RPC per file;
+        # FileSystem.get is cached per (scheme, authority) inside Hadoop
         try:
-            jpath = jvm.org.apache.hadoop.fs.Path(uri)
-            # FileSystem.get is cached per (scheme, authority) inside Hadoop
-            total += jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
+            sizes = {
+                st.getPath().getName(): st.getLen()
+                for st in jdir.getFileSystem(hconf).listStatus(jdir)
+            }
         except Exception:
-            all_statable = False  # unstatable remote file: open cost only
+            sizes = {}  # unlistable remote dir: its files cost open cost only
+        for name in names:
+            if name in sizes:
+                total += sizes[name]
+            else:
+                all_statable = False  # unstatable remote file: open cost only
     est = math.ceil((total + n_files * open_cost) / max_pb) if n_files else 0
     s = df._jdf.queryExecution().analyzed().toString()
     for m in _RANGE_SPLITS_RE.finditer(s):

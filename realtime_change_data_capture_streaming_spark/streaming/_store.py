@@ -3,15 +3,19 @@
 ``cdc/commit.py`` owns the manifest, the GC and the ``buckets`` map
 (partition id -> serving version dir) but is deliberately Spark-free;
 this module reads and writes partition-keyed streaming stores in that
-format (the ANN codes, CUSUM state, BM25 erased-set and near-dup
-stores).  Reads optionally path-prune to an id subset — they touch
-only the partitions asked for, in whichever version dir each one is
-currently served from.
+format (the ANN codes, CUSUM state, txn pending, BM25 erased-set and
+near-dup stores).  ``publish_bucketed_version`` is their one writer and
+``compact_bucketed_version`` their one compactor: every publish asks
+``commit.chain_collapse`` (the chain bound all bucket-mapped tables
+share) and collapses the smallest versions when it trips.  Reads
+optionally path-prune to an id subset — they touch only the partitions
+asked for, in whichever version dir each one is currently served from.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 
@@ -20,13 +24,13 @@ def read_partitioned_store(
     spark: SparkSession,
     store: str,
     partition_col: str,
-    schema: str,
+    schema: str | StructType,
     ids: list | None = None,
 ) -> DataFrame:
     """Rows of the live store snapshot, cast to ``schema`` (a DDL string
-    whose column order is the output order), pruned at the PATH level to
-    ``ids`` when given (the same ``basePath`` + explicit-dirs idiom as the
-    sink's ``read_raw``).  A manifest without a ``buckets`` map raises
+    or StructType whose column order is the output order), pruned at the
+    PATH level to ``ids`` when given (the same ``basePath`` +
+    explicit-dirs idiom as the sink's ``read_raw``).  A manifest without a ``buckets`` map raises
     (``commit.bucket_map``)."""
     from pyspark.sql import functions as F
 
@@ -59,76 +63,51 @@ def read_partitioned_store(
 
 
 def publish_bucketed_version(
-    store: str,
-    rows: DataFrame,
-    id_col: str,
-    part_col: str,
-    n_buckets: int,
-    schema: str,
-    touched: list[int],
-    meta: dict,
-    max_versions: int,
+    store: str, rows: DataFrame, part_col: str, touched: list[int], meta: dict
 ) -> None:
-    """Commit the TOUCHED buckets' full post-image (``rows``) as a new
-    version; untouched buckets keep serving from the versions the
-    manifest already maps them to, and a bucket whose post-image is
-    empty leaves the map entirely.  ``meta`` is the commit's full meta
-    payload (replay frontier plus any store-specific counters) — the
-    updated ``buckets`` map is merged in HERE, so the map and the
-    counters flip in ONE atomic manifest write.  Past ``max_versions``
-    distinct dirs the version chain auto-compacts (without the bound the
-    per-batch bucket rewrites grow the listing forever)."""
-    from pyspark.sql import functions as F
-
+    """Commit the TOUCHED buckets' full post-image as a new version.
+    ``rows`` already carry the bucket id in ``part_col`` (a hash of the
+    row id, a day, a model-assigned cluster: the store decides); each row
+    is written to that bucket.  Untouched buckets keep serving from the
+    versions the manifest already maps them to, and a bucket whose
+    post-image is empty leaves the map entirely.  ``meta`` is the
+    commit's full meta payload (replay frontier plus any store-specific
+    counters) — the updated ``buckets`` map is merged in HERE, so the map
+    and the counters flip in ONE atomic manifest write.  Every publish
+    then asks ``commit.chain_collapse``, on the map it just committed,
+    whether the version chain is due for collapse; only then does
+    ``compact_bucketed_version`` re-read the manifest."""
     m = table_commit.read_manifest(store)
     vdir, seq = table_commit.begin(store)
-    rows.withColumn(part_col, F.pmod(F.col(id_col), F.lit(n_buckets))).write.mode(
-        "overwrite"
-    ).partitionBy(part_col).parquet(vdir)
+    rows.write.mode("overwrite").partitionBy(part_col).parquet(vdir)
     buckets = table_commit.next_bucket_map(
         table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, part_col), touched
     )
     table_commit.commit(store, seq, meta={**meta, "buckets": buckets}, staged=vdir)
-    if len(set(buckets.values())) > max_versions:
-        compact_bucketed_version(
-            rows.sparkSession,
-            store,
-            id_col,
-            part_col,
-            n_buckets,
-            schema,
-            to_versions=max(1, max_versions // 2),
-        )
+    if table_commit.chain_collapse(buckets):
+        compact_bucketed_version(rows.sparkSession, store, part_col, rows.schema)
 
 
 def compact_bucketed_version(
-    sp: SparkSession,
-    store: str,
-    id_col: str,
-    part_col: str,
-    n_buckets: int,
-    schema: str,
-    to_versions: int = 1,
+    sp: SparkSession, store: str, part_col: str, schema: StructType
 ) -> None:
-    """Collapse a bucket-mapped store's version chain down to
-    ``to_versions`` dirs by rewriting ONLY the buckets mapped to the
-    oldest excess versions (the ``compact_ann_store`` I/O model —
-    O(excess buckets' bytes), never the whole store; serving rows
-    unchanged).  Every non-structural manifest key (replay frontier,
-    correction counters, ...) is carried forward unchanged."""
-    from pyspark.sql import functions as F
-
+    """Collapse a bucket-mapped store's version chain when
+    ``commit.chain_collapse`` says it is due, by rewriting ONLY the
+    buckets it names into one new version: O(those buckets' bytes),
+    never the whole store.  ``schema`` is the stored rows' schema,
+    ``part_col`` included, so each row is written back to the bucket it
+    was read from; serving rows are unchanged.  Every non-structural
+    manifest key (replay frontier, correction counters, refit state, ...)
+    is carried forward unchanged."""
     m = table_commit.read_manifest(store)
-    chosen = table_commit.oldest_buckets(table_commit.bucket_map(store, m), to_versions)
+    chosen = table_commit.chain_collapse(table_commit.bucket_map(store, m))
     if not chosen:
         return
     rows = read_partitioned_store(sp, store, part_col, schema, ids=chosen).localCheckpoint(
         eager=True
     )
     vdir, seq = table_commit.begin(store)
-    rows.withColumn(part_col, F.pmod(F.col(id_col), F.lit(n_buckets))).write.mode(
-        "overwrite"
-    ).partitionBy(part_col).parquet(vdir)
+    rows.write.mode("overwrite").partitionBy(part_col).parquet(vdir)
     meta = {k: v for k, v in m.items() if k not in ("version", "seq", "buckets")}
     meta["buckets"] = table_commit.next_bucket_map(
         m["buckets"], vdir, table_commit.staged_ids(vdir, part_col), chosen

@@ -76,6 +76,8 @@ from realtime_change_data_capture_streaming_spark.operators._util import fp_enco
 from realtime_change_data_capture_streaming_spark.session import scratch_dir
 from realtime_change_data_capture_streaming_spark.streaming._drive import drive_staged_stream
 from realtime_change_data_capture_streaming_spark.streaming._store import (
+    compact_bucketed_version,
+    publish_bucketed_version,
     read_partitioned_store,
 )
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
@@ -171,40 +173,18 @@ def _append_codes(store: str, batch_codes: DataFrame, bid: int) -> None:
     touched = sorted(r["cluster"] for r in codes_b.select("cluster").distinct().collect())
     if not touched:
         return
-    m = table_commit.read_manifest(store)
-    prev_touched = _read_store(sp, store, clusters=touched)
-    rows = prev_touched.unionByName(codes_b)
-    vdir, seq = table_commit.begin(store)
-    rows.write.mode("overwrite").partitionBy("cluster").parquet(vdir)
-    buckets = table_commit.next_bucket_map(
-        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "cluster"), touched
-    )
     # carry the refit state through: an append after a partial refit must
     # not reset the refit replay guard, drop the per-cluster generation
     # map, or unpin the committed codebooks (commit() replaces meta
     # wholesale)
-    meta = {"applied_bid": bid, "buckets": buckets}
-    if m is not None:
-        for k in _REFIT_META_KEYS:
-            if k in m:
-                meta[k] = m[k]
-    table_commit.commit(store, seq, meta=meta, staged=vdir)
-    # housekeeping rides the ingest loop (the BM25/sink r14 contract):
-    # every append adds a version that untouched clusters may pin alive;
-    # once the cluster map spans too many version dirs, collapse the
-    # OLDEST part of the chain down to the half-bound watermark (the
-    # sink trigger's hysteresis — compacting back to exactly the bound
-    # would re-trip every append).  The map just committed decides; serving
-    # state is unchanged.
-    if len(set(buckets.values())) > ANN_AUTO_COMPACT_MAX_VERSIONS:
-        compact_ann_store(sp, store, to_versions=max(1, ANN_AUTO_COMPACT_MAX_VERSIONS // 2))
-
-
-#: auto-compaction bound for the cluster-mapped codes store: once the
-#: bucket map references more than this many distinct version dirs, the
-#: append loop collapses the chain (same trigger class as the sink's
-#: ``maybe_compact_sink`` and the BM25 postings cadence).
-ANN_AUTO_COMPACT_MAX_VERSIONS = 8
+    m = table_commit.read_manifest(store) or {}
+    publish_bucketed_version(
+        store,
+        _read_store(sp, store, clusters=touched).unionByName(codes_b),
+        "cluster",
+        touched,
+        {"applied_bid": bid, **{k: m[k] for k in _REFIT_META_KEYS if k in m}},
+    )
 
 
 def _read_erased_vecs(spark: SparkSession, erased_root: str) -> DataFrame | None:
@@ -245,53 +225,33 @@ def _apply_vec_erasures(erased_root: str, del_ids: DataFrame, bid: int) -> None:
     table_commit.commit(erased_root, seq, meta={"applied_bid": bid}, staged=staged)
 
 
-def compact_ann_store(
-    spark: SparkSession, store: str, to_versions: int = 1, erased_root: str | None = None
-) -> None:
-    """Collapse the codes store's version chain down to ``to_versions``
-    dirs by rewriting ONLY the clusters mapped to the oldest excess
-    versions into one new dir (the ``compact_sink(max_buckets=...)``
-    I/O model: O(excess clusters' bytes), never the whole store).
-    Serving state is unchanged (same rows, same layout); the manifest's
-    ingest/refit frontiers and generation map ride through; superseded
-    versions age out through commit()'s grace window.  The default
-    ``to_versions=1`` is the standalone full collapse; the auto-trigger
-    passes the half-bound watermark.
-
-    With ``erased_root``, this is the ERASURE-PURGE compaction: every
-    cluster is rewritten with the tombstoned vec_ids anti-joined out, so
-    erased vectors physically leave the store (bytes shrink to the live
-    corpus and staleness counts stop seeing them).  That is a full
-    O(store) rewrite by design — it runs on the erasure-GC cadence, not
-    per batch; serving never depends on it (the serve-time anti-join
-    stays authoritative)."""
+def compact_ann_store(spark: SparkSession, store: str, erased_root: str) -> None:
+    """The ERASURE-PURGE compaction: every cluster is rewritten with the
+    tombstoned vec_ids anti-joined out, so erased vectors physically
+    leave the store (bytes shrink to the live corpus and staleness
+    counts stop seeing them).  That is a full O(store) rewrite by design
+    — it runs on the erasure-GC cadence, not per batch; serving never
+    depends on it (the serve-time anti-join stays authoritative).  The
+    manifest's ingest/refit frontiers and generation map ride through.
+    The version chain itself is bounded by the appends' shared
+    auto-compaction (``_store.publish_bucketed_version``)."""
     m = table_commit.read_manifest(store)
-    if m is None:
+    erased = _read_erased_vecs(spark, erased_root)
+    if m is None or erased is None:
         return
-    erased = _read_erased_vecs(spark, erased_root) if erased_root is not None else None
-    # a purge run rewrites every cluster; otherwise only the oldest
-    # excess versions', and a store already at (or under) the target is
-    # its own collapse (version dirs are immutable; ADVICE r14)
-    chosen = table_commit.oldest_buckets(
-        table_commit.bucket_map(store, m), 0 if erased is not None else to_versions
-    )
+    chosen = table_commit.oldest_buckets(table_commit.bucket_map(store, m))
     if not chosen:
         return
     rows = _read_store(spark, store, clusters=chosen)
-    if erased is not None:
-        rows = rows.join(F.broadcast(erased), "vec_id", "left_anti")
-    rows = rows.localCheckpoint(eager=True)
-    vdir, seq = table_commit.begin(store)
-    rows.write.mode("overwrite").partitionBy("cluster").parquet(vdir)
+    rows = rows.join(F.broadcast(erased), "vec_id", "left_anti").localCheckpoint(eager=True)
     # a fully-purged cluster writes no partition dir, so it leaves the map
-    buckets = table_commit.next_bucket_map(
-        m["buckets"], vdir, table_commit.staged_ids(vdir, "cluster"), chosen
+    publish_bucketed_version(
+        store,
+        rows,
+        "cluster",
+        chosen,
+        {k: v for k, v in m.items() if k not in ("version", "seq", "buckets")},
     )
-    meta = {"buckets": buckets}
-    for k in ("applied_bid",) + _REFIT_META_KEYS:
-        if k in m:
-            meta[k] = m[k]
-    table_commit.commit(store, seq, meta=meta, staged=vdir)
 
 
 def _read_store(spark: SparkSession, store: str, clusters: list | None = None) -> DataFrame:
@@ -627,6 +587,8 @@ def _rewrite_refit_clusters(
     if m is not None and "applied_bid" in m:
         meta["applied_bid"] = m["applied_bid"]
     table_commit.commit(store, seq, meta=meta, staged=vdir)
+    if table_commit.chain_collapse(buckets):
+        compact_bucketed_version(sp, store, "cluster", rows.schema)
 
 
 def _load_local_cb(spark: SparkSession, store: str) -> DataFrame | None:

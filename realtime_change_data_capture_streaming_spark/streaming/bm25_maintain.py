@@ -189,11 +189,6 @@ def _erased_state(erased_root: str) -> tuple[int, int, int]:
     return m.get("applied_bid", -1), m.get("n_erased", 0), m.get("dl_erased", 0)
 
 
-#: erased-set version-chain bound (the shingle/assign-store contract):
-#: each erasure batch publishes only its touched buckets, so the chain
-#: grows one dir per batch until auto-compaction collapses the oldest.
-ERASED_AUTO_COMPACT_MAX_VERSIONS = 8
-
 #: Broadcast the erased set into the ingest/compact/serve anti-joins only
 #: while it is small.  Erasure is terminal, so the set grows
 #: monotonically — an unconditional broadcast would eventually outgrow
@@ -289,18 +284,14 @@ def _apply_erasures(spark: SparkSession, doclens_root: str, erased_root: str,
 
     publish_bucketed_version(
         erased_root,
-        post,
-        "doc_id",
+        post.withColumn("ebucket", F.pmod("doc_id", F.lit(N_DOC_BUCKETS))),
         "ebucket",
-        N_DOC_BUCKETS,
-        "doc_id bigint",
         buckets,
         {
             "applied_bid": bid,
             "n_erased": n_prev + n_new,
             "dl_erased": dl_prev + dl_new,
         },
-        ERASED_AUTO_COMPACT_MAX_VERSIONS,
     )
 
 

@@ -23,9 +23,9 @@ what makes the final state oracle-replayable).
 State lives in a versioned-dir store (``cdc/commit.py``) with the
 manifest's bucket map keyed by EPOCH DAY: a micro-batch rewrites only
 the day partitions it touched (untouched days keep serving from their
-older version dirs — the ``BucketedParquetSink`` merge I/O model), and
-the applied-batch-id replay guard makes at-least-once re-delivery a
-no-op.  At 100 TB the monitored unit is (series, day): state rows scale
+older version dirs — the ``BucketedParquetSink`` merge I/O model, with
+the same version-chain bound), and the applied-batch-id replay guard
+makes at-least-once re-delivery a no-op.  At 100 TB the monitored unit is (series, day): state rows scale
 with series x days — metadata-scale next to the feed — and per-batch
 work is one partition-sorted window pass over the batch plus an
 equi-join against the touched days' state.
@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 from realtime_change_data_capture_streaming_spark.operators.quality import (
     _CUSUM_CENTS_SQL,
     _CUSUM_H,
@@ -57,6 +56,7 @@ from realtime_change_data_capture_streaming_spark.session import scratch_dir
 from realtime_change_data_capture_streaming_spark.streaming._drive import drive_staged_stream
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
 from realtime_change_data_capture_streaming_spark.streaming._store import (
+    publish_bucketed_version,
     read_partitioned_store,
 )
 from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import (
@@ -199,23 +199,19 @@ def _read_state(spark: SparkSession, store: str, day_keys: list | None = None) -
 def _commit_state(store: str, touched_state: DataFrame, bid: int, touched: list[int]) -> None:
     """One micro-batch state commit: replay-guarded on the batch id,
     rewriting ONLY the ``touched`` day partitions (untouched days keep
-    their manifest-mapped older version dirs).  ``touched`` is the
-    batch's day set, already discovered by the caller — by construction
-    it equals ``touched_state``'s day set (advanced days plus carried
-    same-day series)."""
+    their manifest-mapped older version dirs; the shared chain bound
+    collapses the smallest ones).  ``touched`` is the batch's day set,
+    already discovered by the caller — by construction it equals
+    ``touched_state``'s day set (advanced days plus carried same-day
+    series)."""
     if _already_applied(store, bid):
         return
     touched = sorted(touched)
     if not touched:
         return
-    new_rows = touched_state.localCheckpoint(eager=True)
-    m = table_commit.read_manifest(store)
-    vdir, seq = table_commit.begin(store)
-    new_rows.write.mode("overwrite").partitionBy("day_key").parquet(vdir)
-    buckets = table_commit.next_bucket_map(
-        table_commit.bucket_map(store, m), vdir, table_commit.staged_ids(vdir, "day_key"), touched
+    publish_bucketed_version(
+        store, touched_state.localCheckpoint(eager=True), "day_key", touched, {"applied_bid": bid}
     )
-    table_commit.commit(store, seq, meta={"applied_bid": bid, "buckets": buckets}, staged=vdir)
 
 
 def _summarize(state: DataFrame, kref: DataFrame) -> DataFrame:

@@ -159,12 +159,6 @@ N_SHINGLE_BUCKETS = 16
 
 _SH_SCHEMA = "doc_id bigint, lang string, source string, shingle string, n_shingles bigint"
 
-#: shingle-store version-chain bound: past this many distinct version
-#: dirs in the bucket map, the next publish collapses the oldest part of
-#: the chain (the ANN/BM25/sink auto-compaction contract — without it
-#: the per-batch bucket rewrites grow the listing without bound).
-SHINGLE_AUTO_COMPACT_MAX_VERSIONS = 8
-
 
 def _sbucket(col):
     return F.pmod(col, F.lit(N_SHINGLE_BUCKETS))
@@ -196,8 +190,8 @@ def _publish_shingle_buckets(store: str, rows: DataFrame, touched: list[int], bi
     from realtime_change_data_capture_streaming_spark.streaming._store import publish_bucketed_version
 
     publish_bucketed_version(
-        store, rows, "doc_id", "sbucket", N_SHINGLE_BUCKETS, _SH_SCHEMA,
-        touched, {"applied_bid": bid}, SHINGLE_AUTO_COMPACT_MAX_VERSIONS,
+        store, rows.withColumn("sbucket", _sbucket(F.col("doc_id"))), "sbucket",
+        touched, {"applied_bid": bid},
     )
 
 
@@ -205,16 +199,8 @@ def _publish_assign_buckets(store: str, rows: DataFrame, touched: list[int], bid
     from realtime_change_data_capture_streaming_spark.streaming._store import publish_bucketed_version
 
     publish_bucketed_version(
-        store, rows, "node", "abucket", N_SHINGLE_BUCKETS, _ASSIGN_SCHEMA,
-        touched, {"applied_bid": bid}, SHINGLE_AUTO_COMPACT_MAX_VERSIONS,
-    )
-
-
-def _compact_shingles(sp: SparkSession, store: str, to_versions: int = 1) -> None:
-    from realtime_change_data_capture_streaming_spark.streaming._store import compact_bucketed_version
-
-    compact_bucketed_version(
-        sp, store, "doc_id", "sbucket", N_SHINGLE_BUCKETS, _SH_SCHEMA, to_versions
+        store, rows.withColumn("abucket", _sbucket(F.col("node"))), "abucket",
+        touched, {"applied_bid": bid},
     )
 
 

@@ -233,11 +233,10 @@ def test_append_loop_auto_compacts_version_chain(spark, tmp_path, monkeypatch):
     """The codes store rides the same r14 housekeeping contract as the
     BM25 postings and the sink: once appends leave the cluster map
     spanning more version dirs than the bound, the append loop collapses
-    the chain — state, frontiers, and generations unchanged."""
-    import realtime_change_data_capture_streaming_spark.streaming.ann_maintain as am
-
+    the chain — state, frontiers, and generations unchanged.  The bound
+    is ``commit.py``'s one constant, lowered here."""
     store = str(tmp_path / "store")
-    monkeypatch.setattr(am, "ANN_AUTO_COMPACT_MAX_VERSIONS", 3)
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 3)
     # each batch touches its own cluster -> one new pinned version per append
     for i in range(6):
         _append_codes(store, _codes(spark, [(100 + i, 0, i, i)]), i)
@@ -248,7 +247,7 @@ def test_append_loop_auto_compacts_version_chain(spark, tmp_path, monkeypatch):
 
     # without the trigger the same appends pin 6 distinct versions
     store2 = str(tmp_path / "store2")
-    monkeypatch.setattr(am, "ANN_AUTO_COMPACT_MAX_VERSIONS", 10_000)
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 10_000)
     for i in range(6):
         _append_codes(store2, _codes(spark, [(100 + i, 0, i, i)]), i)
     m2 = table_commit.read_manifest(store2)

@@ -94,6 +94,26 @@ def test_replay_of_applied_batch_is_a_noop(spark, tmp_path):
     assert table_commit.read_manifest(store)["seq"] == seq_before
 
 
+def test_state_chain_is_bounded(spark, tmp_path, monkeypatch):
+    """The state store rides the shared version-chain bound: with the
+    bound lowered to 2, a 4-batch drive keeps the chain at or under 2
+    version dirs (one batch's days would otherwise pin its version
+    forever), and the collapse changes no state — the summary equals an
+    unbounded drive's."""
+    cuts = ["2024-01-13 07:30:00", "2024-01-16 18:00:00", "2024-01-21 03:15:00"]
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 2)
+    bounded = _rows_of(_drive_split(spark, str(tmp_path / "bounded"), cuts))
+    m = table_commit.read_manifest(str(tmp_path / "bounded"))
+    assert len(set(m["buckets"].values())) <= 2, m["buckets"]
+    assert m["seq"] > len(cuts), "the bound never tripped a collapse"
+
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 10_000)
+    unbounded = _rows_of(_drive_split(spark, str(tmp_path / "unbounded"), cuts))
+    m_u = table_commit.read_manifest(str(tmp_path / "unbounded"))
+    assert len(set(m_u["buckets"].values())) > 2, "fixture too small to grow a chain"
+    assert bounded == unbounded
+
+
 def test_registered_cuts_split_days_across_batches(spark):
     """The registered cut points must cut MID-DAY — at least one
     (event_type, day) must have events on both sides of each cut, or the

@@ -128,9 +128,8 @@ def test_view_stream_bounds_sink_version_chain(spark, tmp_path, monkeypatch):
     ]
     in_dir = stage_ordered_batches(frames, str(tmp_path / "staged"))
     trips = []
-    monkeypatch.setattr(
-        mv, "maybe_compact_sink", lambda s: trips.append(ac.maybe_compact_sink(s, max_versions=2))
-    )
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 2)
+    monkeypatch.setattr(mv, "maybe_compact_sink", lambda s: trips.append(ac.maybe_compact_sink(s)))
     stream = (
         spark.readStream.schema("key string, value string")
         .option("maxFilesPerTrigger", 1)

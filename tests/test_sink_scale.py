@@ -549,12 +549,13 @@ def test_fully_tombstoned_compaction_keeps_table_alive(spark, big_parsed, tmp_pa
     assert sink.read().count() == 6
 
 
-def test_maybe_compact_sink_bounds_version_chain(spark, big_parsed, tmp_path):
+def test_maybe_compact_sink_bounds_version_chain(spark, big_parsed, tmp_path, monkeypatch):
     """VERDICT r13 task 4 (sink half): the manifest-tracked trigger —
-    below the bound it is a no-op (no commit, False); above it, one
-    incremental compact_sink(max_buckets=...) run rewrites exactly the
-    buckets pinning the oldest versions and restores the bound, with the
-    table state unchanged."""
+    at the bound it is a no-op (no commit, False); above it, one
+    incremental compact_sink(buckets=...) run rewrites exactly the
+    buckets ``commit.chain_collapse`` names and restores the bound, with
+    the table state unchanged.  The bound is ``commit.py``'s one constant,
+    lowered here."""
     from realtime_change_data_capture_streaming_spark.cdc.apply_changes import maybe_compact_sink
 
     # small disjoint slices (~10 keys over 64 buckets) so each merge's
@@ -571,24 +572,27 @@ def test_maybe_compact_sink_bounds_version_chain(spark, big_parsed, tmp_path):
     want = _sorted_rows(sink.read())
     seq_before = m["seq"]
 
-    assert maybe_compact_sink(sink, max_versions=n_versions) is False
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", n_versions)
+    assert maybe_compact_sink(sink) is False
     assert table_commit.read_manifest(sink.path)["seq"] == seq_before, "no-op must not commit"
 
-    assert maybe_compact_sink(sink, max_versions=3) is True
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 3)
+    assert maybe_compact_sink(sink) is True
     m2 = table_commit.read_manifest(sink.path)
-    # hysteresis: the trip collapses to the LOW watermark (max_versions//2),
+    # hysteresis: the trip collapses to the LOW watermark (bound // 2),
     # not back to the bound — so the next merges don't re-trip immediately
     assert len(set(m2["buckets"].values())) <= 1, m2["buckets"]
     assert _sorted_rows(sink.read()) == want
-    assert maybe_compact_sink(sink, max_versions=3) is False, "re-trip right after compacting"
+    assert maybe_compact_sink(sink) is False, "re-trip right after compacting"
 
 
-def test_stream_merge_loop_auto_compacts(spark, tmp_path):
+def test_stream_merge_loop_auto_compacts(spark, tmp_path, monkeypatch):
     """The streaming wire-up: a 6-micro-batch apply_changes_stream with
-    auto_compact_max_versions=2 must end with a bounded version chain and
-    the same table state as an unbounded run — housekeeping rides the
-    merge loop instead of waiting for an external job that never comes."""
-    from realtime_change_data_capture_streaming_spark.cdc.apply_changes import apply_changes_stream
+    the chain bound lowered to 2 must trip the trigger, end with a
+    bounded version chain, and hold the batch latest-wins state —
+    housekeeping rides the merge loop instead of waiting for an external
+    job that never comes."""
+    from realtime_change_data_capture_streaming_spark.cdc import apply_changes as ac
     from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import stage_ordered_batches
 
     raw = synthetic_change_events(spark, 60, updates_per_key=0, delete_every=0, seed=7)
@@ -597,31 +601,30 @@ def test_stream_merge_loop_auto_compacts(spark, tmp_path):
         for i in range(6)
     ]
     in_dir = stage_ordered_batches(frames, str(tmp_path / "staged"))
+    monkeypatch.setattr(table_commit, "MAX_CHAIN_VERSIONS", 2)
+    trips = []
+    real_trigger = ac.maybe_compact_sink
+    monkeypatch.setattr(ac, "maybe_compact_sink", lambda s: trips.append(real_trigger(s)))
 
-    def run(dest: str, bound):
-        stream = (
-            spark.readStream.schema("key string, value string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        sink = BucketedParquetSink(spark, str(tmp_path / dest), n_buckets=64)
-        q = apply_changes_stream(
-            parse_envelope(stream, decimal_mode="string"),
-            sink,
-            str(tmp_path / f"{dest}_ckpt"),
-            trigger={"availableNow": True},
-            auto_compact_max_versions=bound,
-        )
-        q.awaitTermination()
-        return sink
+    stream = (
+        spark.readStream.schema("key string, value string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    sink = BucketedParquetSink(spark, str(tmp_path / "sink"), n_buckets=64)
+    q = ac.apply_changes_stream(
+        parse_envelope(stream, decimal_mode="string"),
+        sink,
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination()
 
-    bounded = run("bounded", 2)
-    unbounded = run("unbounded", None)
-    m_b = table_commit.read_manifest(bounded.path)
-    m_u = table_commit.read_manifest(unbounded.path)
-    assert len(set(m_u["buckets"].values())) > 2, "fixture too small to exercise the trigger"
-    assert len(set(m_b["buckets"].values())) <= 2, m_b["buckets"]
-    assert _sorted_rows(bounded.read()) == _sorted_rows(unbounded.read())
+    assert len(trips) == 6 and any(trips), trips
+    m = table_commit.read_manifest(sink.path)
+    assert len(set(m["buckets"].values())) <= 2, m["buckets"]
+    oracle = ac.apply_changes_batch(parse_envelope(raw.select("key", "value"), decimal_mode="string"))
+    assert _sorted_rows(sink.read()) == _sorted_rows(oracle)
 
 
 def test_concurrent_commit_loses_loudly(tmp_path):
@@ -678,11 +681,29 @@ def test_bucket_map_rule_and_staging_rename(tmp_path):
         os.path.join(root, "v00000001"): [1, 4],
     }
 
-    # the collapse choice: oldest version first, ties by id
+    # the collapse order: oldest version first, ties by id
     chain = {"0": "v00000002", "1": "v00000000", "2": "v00000001", "3": "v00000000"}
-    assert tc.oldest_buckets(chain, 3) == []
-    assert tc.oldest_buckets(chain, 2) == [1, 3, 2]
     assert tc.oldest_buckets(chain) == [1, 3, 2, 0]
+
+    # the chain bound: no trip at the bound; above it, the buckets whose
+    # rewrite into ONE new version leaves the map spanning half the bound
+    assert tc.MAX_CHAIN_VERSIONS == 8
+    at_bound = {str(b): f"v{b:08d}" for b in range(8)}
+    assert tc.chain_collapse(at_bound) == []
+    over = {str(b): f"v{b % 9:08d}" for b in range(18)}  # 9 versions, 2 ids each
+    due = tc.chain_collapse(over)
+    assert due == [0, 9, 1, 10, 2, 11, 3, 12, 4, 13, 5, 14]  # equal sizes: the 6 oldest
+    collapsed = tc.next_bucket_map(over, str(tmp_path / "v00000009"), set(due), due)
+    assert len(set(collapsed.values())) == tc.MAX_CHAIN_VERSIONS // 2
+    assert tc.chain_collapse(collapsed) == [], "re-trip right after collapsing"
+    # fewest-first: the large version the collapse left (12 ids in
+    # v00000009) is older than the 5 one-id versions published since, but
+    # the next trip merges the small ones and leaves it alone
+    grown = {**collapsed, **{str(20 + i): f"v{10 + i:08d}" for i in range(5)}}
+    assert len(set(grown.values())) == 9
+    due = tc.chain_collapse(grown)
+    # the five one-id versions, then the oldest two-id one
+    assert {grown[str(b)] for b in due} == {"v00000006"} | {f"v{10 + i:08d}" for i in range(5)}
 
 
 def test_flat_layout_sink_raises(spark, tmp_path):

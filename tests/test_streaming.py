@@ -216,15 +216,17 @@ def test_tws_matches_apply_in_pandas_with_state(spark):
 
 
 def test_txn_gate_compaction_bounds_pending_without_changing_final_state(spark):
-    """The txn pending store's BOUNDED form (the shape the registered
-    query's docstring promises at scale): with compact=True each batch
-    rewrites only its touched txn-hash buckets, dropping released
-    transactions' rows.  The final table must equal the grow-only run's,
+    """The txn pending store is BOUNDED: each batch rewrites only its
+    touched txn-hash buckets, dropping released transactions' rows.  The
+    final table must equal the batch gate's (``cdc_txn_consistent_apply``),
     and the ending store must hold ONLY the permanently-incomplete
     transactions' events (the %_TXN_DROP updates that never arrive)."""
     from pyspark.sql import functions as F
 
-    from realtime_change_data_capture_streaming_spark.cdc.queries import txn_change_events
+    from realtime_change_data_capture_streaming_spark.cdc.queries import (
+        cdc_txn_consistent_apply,
+        txn_change_events,
+    )
     from realtime_change_data_capture_streaming_spark.session import scratch_dir
     from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
     from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import _run_txn_stream
@@ -234,10 +236,8 @@ def test_txn_gate_compaction_bounds_pending_without_changing_final_state(spark):
     op = F.get_json_object(F.col("value"), "$.op")
     frames = [events.filter(op == "c"), events.filter(op != "c")]
 
-    base, _ = _run_txn_stream(spark, frames, meta, scratch_dir(prefix="txn_base_"))
-    got, paths = _run_txn_stream(
-        spark, frames, meta, scratch_dir(prefix="txn_cpt_"), compact=True
-    )
+    base = cdc_txn_consistent_apply(spark, sf_dir)
+    got, paths = _run_txn_stream(spark, frames, meta, scratch_dir(prefix="txn_cpt_"))
     assert base.exceptAll(got).count() == 0 and got.exceptAll(base).count() == 0
     assert got.count() > 0
 
