@@ -27,13 +27,13 @@ from __future__ import annotations
 
 import json
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructType
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import read_bucketed
 
 
 #: the merge skips bucket discovery and merges against the whole table
@@ -49,13 +49,9 @@ _DISCOVERY_MIN_TABLE_BYTES = 64 << 20
 _DISCOVERY_MIN_BUCKETS = 16
 
 
-def _recorded_schema(m: dict | None, partial_ok: bool = False) -> StructType | None:
-    """The table schema a manifest records.  Only a ``schema_complete``
-    manifest records the WHOLE table's schema: older writers recorded the
-    schema of just the buckets one merge or partial compaction wrote, so
-    reads infer from footers for them (None) unless ``partial_ok``."""
-    if not m or not m.get("schema_json") or not (partial_ok or m.get("schema_complete")):
-        return None
+def _recorded_schema(m: dict) -> StructType:
+    """The whole table's schema, as the manifest records it (every read
+    uses it; ``_manifest`` refuses a manifest that lacks it)."""
     return StructType.fromJson(json.loads(m["schema_json"]))
 
 
@@ -162,12 +158,32 @@ class BucketedParquetSink:
     def _manifest(self, at_seq: int | None = None) -> dict | None:
         """The live manifest, or the one published at ``at_seq`` (KeyError
         past the grace window).  A manifest without a ``buckets`` map is
-        the flat layout and raises ValueError (``commit.bucket_map``)."""
+        the flat layout and raises ValueError (``commit.bucket_map``); so
+        does one without the ``schema_complete`` stamp, whose recorded
+        schema may cover only the buckets one older merge or partial
+        compaction wrote.  Either sink must be rebuilt."""
         if at_seq is None:
             m = table_commit.read_manifest(self.path)
         else:
             m = table_commit.manifest_at(self.path, at_seq)
         table_commit.bucket_map(self.path, m)
+        if m is not None and not m.get("schema_complete"):
+            raise ValueError(
+                f"sink {self.path!r} (manifest seq {m.get('seq')}) records no complete "
+                "table schema: it was written before the 'schema_complete' stamp; "
+                "rebuild it"
+            )
+        return m
+
+    def _existing_manifest(self, at_seq: int | None = None) -> dict:
+        """:meth:`_manifest`, raising FileNotFoundError before the table
+        exists."""
+        m = self._manifest(at_seq)
+        if m is None:
+            raise FileNotFoundError(
+                f"sink table does not exist yet: {self.path!r} (no manifest) — "
+                "merge() a batch first"
+            )
         return m
 
     def current_n_buckets(self) -> int:
@@ -201,13 +217,6 @@ class BucketedParquetSink:
         and the bucketed write needs no second shuffle (see merge)."""
         n = n_buckets if n_buckets is not None else self.current_n_buckets()
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(n))
-
-    def _schema(self, m: dict | None, buckets: list[int] | None = None) -> StructType:
-        """Schema of snapshot ``m``: the manifest's record, or footer
-        inference through :meth:`read_raw` (over ``buckets``) for a
-        manifest without a ``schema_complete`` stamp."""
-        seq = m["seq"] if m else None
-        return _recorded_schema(m) or self.read_raw(buckets=buckets, at_seq=seq).schema
 
     def exists(self) -> bool:
         return self._manifest() is not None
@@ -255,21 +264,15 @@ class BucketedParquetSink:
 
         if not keys:
             raise ValueError("lookup: need at least one key")
-        m = self._manifest(at_seq)
-        if m is not None:
-            # pin the whole probe to THIS snapshot: n_buckets, the key
-            # type and the pruned read must resolve the SAME manifest —
-            # re-resolving the live pointer later would let a concurrent
-            # re-bucketing compaction commit in between, and the probe
-            # would prune the new layout with bucket ids hashed under the
-            # old count (silently empty results)
-            at_seq = m["seq"]
-        n = m["n_buckets"] if m else self.n_buckets
-        # an unstamped manifest infers the key type from ONE bucket's
-        # footers: a GET must not pay O(n_buckets) metadata I/O before any
-        # pruning
-        one = [int(next(iter(m["buckets"])))] if m and m["buckets"] else None
-        ktype = self._schema(m, buckets=one)[self.key_col].dataType
+        # pin the whole probe to THIS snapshot: n_buckets, the key type
+        # and the pruned read must resolve the SAME manifest —
+        # re-resolving the live pointer later would let a concurrent
+        # re-bucketing compaction commit in between, and the probe would
+        # prune the new layout with bucket ids hashed under the old count
+        # (silently empty results)
+        m = self._existing_manifest(at_seq)
+        at_seq, n = m["seq"], m["n_buckets"]
+        ktype = _recorded_schema(m)[self.key_col].dataType
         probe_keys = pa.array(keys)
         if isinstance(ktype, BinaryType) and not pa.types.is_binary(probe_keys.type):
             # a cast would hash the text's UTF-8 bytes: refuse rather than
@@ -305,46 +308,20 @@ class BucketedParquetSink:
         version dirs and cannot disturb these files (GC retains referenced
         versions plus a grace window).
 
-        Every version group is read with the manifest's recorded schema:
-        no footer-inference job, and buckets written before a schema
-        evolution read the evolved columns as nulls.  A manifest without
-        the ``schema_complete`` stamp falls back to inference, unioned by
-        name with null-fill.  A manifest without a ``buckets`` map (the
-        flat layout) raises ValueError.
+        Every version group is read with the manifest's recorded schema
+        (``bucketed.read_bucketed``): no footer-inference job, and buckets
+        written before a schema evolution read the evolved columns as
+        nulls.  A manifest without a ``buckets`` map (the flat layout) or
+        without the ``schema_complete`` stamp raises ValueError.
 
         ``at_seq`` reads the snapshot published at that commit instead of
         the live one — Delta/Iceberg-style time travel, bounded by the
         grace window (KeyError past it).
         """
-        m = self._manifest(at_seq)
-        if m is None:
-            raise FileNotFoundError(
-                f"sink table does not exist yet: {self.path!r} (no manifest) — "
-                "merge() a batch first"
-            )
-        schema = _recorded_schema(m)
-        want = set(buckets) if buckets is not None else None
-        parts = []
-        for vdir, bids in table_commit.bucket_paths(self.path, m).items():
-            sel = bids if want is None else [b for b in bids if b in want]
-            if not sel:
-                continue
-            reader = self.spark.read.option("basePath", vdir)
-            if schema is not None:
-                reader = reader.schema(schema)
-            parts.append(reader.parquet(*[f"{vdir}/_bucket={b}" for b in sel]))
-        if not parts:
-            # empty selection: zero rows with the snapshot's schema (the
-            # recorded one also covers a fully tombstone-purged table,
-            # whose version dir holds no parquet to infer from)
-            schema = schema or _recorded_schema(m, partial_ok=True)
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.parquet(os.path.join(self.path, m["version"])).limit(0)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        m = self._existing_manifest(at_seq)
+        return read_bucketed(
+            self.spark, self.path, "_bucket", _recorded_schema(m), ids=buckets, m=m
+        )
 
     def changes(self, from_seq: int, to_seq: int | None = None) -> DataFrame:
         """Change data feed: row-level changes between two snapshots (the
@@ -584,8 +561,7 @@ class BucketedParquetSink:
             # empty creation batch (possible now that streaming callers
             # skip the per-batch isEmpty() job): nothing to publish —
             # leave the table nonexistent rather than commit a
-            # zero-bucket version that read() could not infer a schema
-            # from
+            # zero-bucket version
             import shutil
 
             shutil.rmtree(vdir, ignore_errors=True)
@@ -609,7 +585,7 @@ class BucketedParquetSink:
                 # the table schema rides in the manifest: every read uses
                 # it, and a fully-empty snapshot stays readable
                 "schema_json": _widened_schema_json(
-                    self._schema(_m0) if _m0 else StructType(), bucketed.schema
+                    _recorded_schema(_m0) if _m0 else StructType(), bucketed.schema
                 ),
                 "schema_complete": True,
             },
@@ -700,7 +676,7 @@ def compact_sink(
     bucket_map = table_commit.next_bucket_map(
         m["buckets"] if partial else {}, vdir, table_commit.staged_ids(vdir, "_bucket"), chosen
     )
-    table_schema = sink._schema(m) if partial else StructType()
+    table_schema = _recorded_schema(m) if partial else StructType()
     meta = {
         "n_buckets": n_new,
         "buckets": bucket_map,

@@ -1,15 +1,16 @@
-"""Spark-side reader and writers over ``cdc/commit.py``'s bucket-map format.
+"""Spark-side layer over ``cdc/commit.py``'s bucket-map format.
 
 ``cdc/commit.py`` owns the manifest, the GC and the ``buckets`` map
-(partition id -> serving version dir) but is deliberately Spark-free;
-this module reads and writes partition-keyed streaming stores in that
-format (the ANN codes, CUSUM state, txn pending, BM25 erased-set and
-near-dup stores).  ``publish_bucketed_version`` is their one writer and
+(bucket id -> serving version dir) but is deliberately Spark-free; this
+module is the one place Spark reads and writes that format.
+:func:`read_bucketed` is the one reader: the sink's ``read_raw`` and
+every streaming store (the ANN codes, CUSUM state, txn pending, BM25
+erased-set and near-dup stores) read through it, always with a schema
+the caller already knows, so no read infers one from parquet footers.
+``publish_bucketed_version`` is the stores' one writer and
 ``compact_bucketed_version`` their one compactor: every publish asks
 ``commit.chain_collapse`` (the chain bound all bucket-mapped tables
-share) and collapses the smallest versions when it trips.  Reads
-optionally path-prune to an id subset — they touch only the partitions
-asked for, in whichever version dir each one is currently served from.
+share) and collapses the smallest versions when it trips.
 """
 
 from __future__ import annotations
@@ -20,46 +21,49 @@ from pyspark.sql.types import StructType
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 
 
-def read_partitioned_store(
+def read_bucketed(
     spark: SparkSession,
-    store: str,
-    partition_col: str,
+    root: str,
+    part_col: str,
     schema: str | StructType,
     ids: list | None = None,
+    m: dict | None = None,
 ) -> DataFrame:
-    """Rows of the live store snapshot, cast to ``schema`` (a DDL string
-    or StructType whose column order is the output order), pruned at the
-    PATH level to ``ids`` when given (the same ``basePath`` +
-    explicit-dirs idiom as the sink's ``read_raw``).  A manifest without a ``buckets`` map raises
-    (``commit.bucket_map``)."""
-    from pyspark.sql import functions as F
-
-    m = table_commit.read_manifest(store)
-    if not m:
-        return spark.createDataFrame([], schema)
+    """Rows of a bucket-mapped table's snapshot ``m`` (the live manifest
+    when omitted), pruned at the PATH level to the bucket ``ids`` when
+    given: each version dir the map serves is read once, over only its
+    selected ``<part_col>=<id>`` dirs, so the scan never lists the other
+    buckets at all.  ``schema`` (a DDL string or StructType) is the
+    stored rows' schema: every group is read with it — no
+    footer-inference job, and columns a group's files lack read as nulls
+    — and the output columns are its fields in its order (``part_col``
+    only when it lists it).  No selected bucket, or no table yet, gives
+    an empty frame of ``schema``.  A manifest without a ``buckets`` map
+    raises (``commit.bucket_map``)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if m is None:
+        m = table_commit.read_manifest(root)
     want = {int(k) for k in ids} if ids is not None else None
-    # Spark's own DDL parser, not string-splitting: parameterized types
-    # (decimal(18,2), map<...>) contain commas/spaces a naive split mangles
-    col_types = [
-        (f.name, f.dataType) for f in spark.createDataFrame([], schema).schema.fields
-    ]
     parts = []
-    for vdir, served in table_commit.bucket_paths(store, m).items():
+    for vdir, served in table_commit.bucket_paths(root, m).items():
         sel = served if want is None else [k for k in served if k in want]
-        if not sel:
-            continue
-        paths = [f"{vdir}/{partition_col}={k}" for k in sel]
-        parts.append(
-            spark.read.option("basePath", vdir)
-            .parquet(*paths)
-            .select(*[F.col(c).cast(t).alias(c) for c, t in col_types])
-        )
+        if sel:
+            parts.append(
+                spark.read.schema(schema)
+                .option("basePath", vdir)
+                .parquet(*[f"{vdir}/{part_col}={k}" for k in sel])
+            )
     if not parts:
         return spark.createDataFrame([], schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
+    # the scan puts the partition column last (appending it when the
+    # schema omits it), so only a schema that does not end with it needs
+    # the projection back to its own order
+    names = schema.fieldNames()
+    return out if names[-1] == part_col else out.select(*names)
 
 
 def publish_bucketed_version(
@@ -96,16 +100,16 @@ def compact_bucketed_version(
     buckets it names into one new version: O(those buckets' bytes),
     never the whole store.  ``schema`` is the stored rows' schema,
     ``part_col`` included, so each row is written back to the bucket it
-    was read from; serving rows are unchanged.  Every non-structural
-    manifest key (replay frontier, correction counters, refit state, ...)
-    is carried forward unchanged."""
+    was read from; serving rows are unchanged.  The read feeds the one
+    staging write directly: the versions it reads stay live until the
+    commit below supersedes them.  Every non-structural manifest key
+    (replay frontier, correction counters, refit state, ...) is carried
+    forward unchanged."""
     m = table_commit.read_manifest(store)
     chosen = table_commit.chain_collapse(table_commit.bucket_map(store, m))
     if not chosen:
         return
-    rows = read_partitioned_store(sp, store, part_col, schema, ids=chosen).localCheckpoint(
-        eager=True
-    )
+    rows = read_bucketed(sp, store, part_col, schema, ids=chosen, m=m)
     vdir, seq = table_commit.begin(store)
     rows.write.mode("overwrite").partitionBy(part_col).parquet(vdir)
     meta = {k: v for k, v in m.items() if k not in ("version", "seq", "buckets")}

@@ -72,14 +72,14 @@ from realtime_change_data_capture_streaming_spark.llm_ops.similarity import (
     ivf_fit,
     pq_fit,
 )
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import (
+    compact_bucketed_version,
+    publish_bucketed_version,
+    read_bucketed,
+)
 from realtime_change_data_capture_streaming_spark.operators._util import fp_encode_sql, fp_mean_sql, spread
 from realtime_change_data_capture_streaming_spark.session import scratch_dir
 from realtime_change_data_capture_streaming_spark.streaming._drive import drive_staged_stream
-from realtime_change_data_capture_streaming_spark.streaming._store import (
-    compact_bucketed_version,
-    publish_bucketed_version,
-    read_partitioned_store,
-)
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
 from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import stage_ordered_batches
 from realtime_change_data_capture_streaming_spark.streaming.sketches import _already_applied
@@ -234,7 +234,7 @@ def compact_ann_store(spark: SparkSession, store: str, erased_root: str) -> None
     depends on it (the serve-time anti-join stays authoritative).  The
     manifest's ingest/refit frontiers and generation map ride through.
     The version chain itself is bounded by the appends' shared
-    auto-compaction (``_store.publish_bucketed_version``)."""
+    auto-compaction (``cdc/bucketed.publish_bucketed_version``)."""
     m = table_commit.read_manifest(store)
     erased = _read_erased_vecs(spark, erased_root)
     if m is None or erased is None:
@@ -256,9 +256,9 @@ def compact_ann_store(spark: SparkSession, store: str, erased_root: str) -> None
 
 def _read_store(spark: SparkSession, store: str, clusters: list | None = None) -> DataFrame:
     """Manifest-driven read of the appended-codes store, optionally
-    pruned to a cluster subset at the PATH level (shared reader:
-    ``streaming/_store.py``)."""
-    return read_partitioned_store(spark, store, "cluster", _CODES_SCHEMA, ids=clusters)
+    pruned to a cluster subset at the PATH level (the one bucket-mapped
+    reader: ``cdc/bucketed.py``)."""
+    return read_bucketed(spark, store, "cluster", _CODES_SCHEMA, ids=clusters)
 
 
 def _with_staleness(appended: DataFrame, base_codes: DataFrame) -> DataFrame:
@@ -719,9 +719,7 @@ def _do_partial_refit(
             vecs = spread(load_table(spark, sf_dir, "embeddings")).join(mem, "vec_id")
             csubs = _subvectors(vecs).join(mem, "vec_id").select("cluster", "vec_id", "s", "sub")
             cb_now = _pq_fit_clustered(csubs)
-            new_codes = _pq_assign_clustered(csubs, cb_now).select(
-                "vec_id", F.col("s").cast("bigint").alias("s"), "code", "cluster"
-            )
+            new_codes = _pq_assign_clustered(csubs, cb_now)
             _rewrite_refit_clusters(store, new_codes, tripped_now, bid, cb_local=cb_now)
     # serving view — ALWAYS reconstructed from the committed store, so
     # the fresh path, the replay path, and a later round all read the

@@ -92,6 +92,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import publish_bucketed_version, read_bucketed
 from realtime_change_data_capture_streaming_spark.llm_ops.text import (
     BM25_SQL,
     _bm25_chain_sql,
@@ -207,12 +208,10 @@ def _read_erased(
     given; None when nothing was ever erased.  A manifest in the earlier
     flat layout raises: reading it as "nothing erased" while its
     counters still correct the scores would resurface erased documents."""
-    from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
-
     m = table_commit.read_manifest(erased_root)
     if m is None or m.get("buckets") == {}:
         return None
-    return read_partitioned_store(spark, erased_root, "ebucket", "doc_id bigint", ids=buckets)
+    return read_bucketed(spark, erased_root, "ebucket", "doc_id bigint", ids=buckets, m=m)
 
 
 def _erased_antijoin_side(spark: SparkSession, erased_root: str) -> DataFrame | None:
@@ -280,8 +279,6 @@ def _apply_erasures(spark: SparkSession, doclens_root: str, erased_root: str,
         ).collect()[0]
         n_new, dl_new = int(row["n"]), int(row["s"])
     post = new_ids if prev is None else prev.unionByName(new_ids)
-    from realtime_change_data_capture_streaming_spark.streaming._store import publish_bucketed_version
-
     publish_bucketed_version(
         erased_root,
         post.withColumn("ebucket", F.pmod("doc_id", F.lit(N_DOC_BUCKETS))),

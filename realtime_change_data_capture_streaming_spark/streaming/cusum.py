@@ -46,6 +46,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import (
+    publish_bucketed_version,
+    read_bucketed,
+)
 from realtime_change_data_capture_streaming_spark.operators.quality import (
     _CUSUM_CENTS_SQL,
     _CUSUM_H,
@@ -55,10 +59,6 @@ from realtime_change_data_capture_streaming_spark.operators.quality import (
 from realtime_change_data_capture_streaming_spark.session import scratch_dir
 from realtime_change_data_capture_streaming_spark.streaming._drive import drive_staged_stream
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
-from realtime_change_data_capture_streaming_spark.streaming._store import (
-    publish_bucketed_version,
-    read_partitioned_store,
-)
 from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import (
     stage_ordered_batches,
 )
@@ -192,8 +192,8 @@ def _advance_touched(state: DataFrame, batch_rows: DataFrame) -> DataFrame:
 
 def _read_state(spark: SparkSession, store: str, day_keys: list | None = None) -> DataFrame:
     """Manifest-driven read of the state store, optionally path-pruned to
-    a day subset (shared reader: ``streaming/_store.py``)."""
-    return read_partitioned_store(spark, store, "day_key", _STATE_SCHEMA, ids=day_keys)
+    a day subset (the one bucket-mapped reader: ``cdc/bucketed.py``)."""
+    return read_bucketed(spark, store, "day_key", _STATE_SCHEMA, ids=day_keys)
 
 
 def _commit_state(store: str, touched_state: DataFrame, bid: int, touched: list[int]) -> None:

@@ -29,6 +29,7 @@ from realtime_change_data_capture_streaming_spark.streaming._drive import drive_
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import publish_bucketed_version, read_bucketed
 from realtime_change_data_capture_streaming_spark.llm_ops.dedup import MINHASH_LSH_SQL, minhash_band_buckets
 from realtime_change_data_capture_streaming_spark.sources.tables import load_table
 
@@ -173,22 +174,16 @@ _ASSIGN_SCHEMA = "node bigint, component bigint"
 def _read_shingles(sp: SparkSession, store: str, doc_buckets: list[int] | None = None) -> DataFrame:
     """Manifest-driven read of the bucket-mapped shingle store, path-pruned
     to a doc-id bucket subset when given."""
-    from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
-
-    return read_partitioned_store(sp, store, "sbucket", _SH_SCHEMA, ids=doc_buckets)
+    return read_bucketed(sp, store, "sbucket", _SH_SCHEMA, ids=doc_buckets)
 
 
 def _read_assign(sp: SparkSession, store: str, node_buckets: list[int] | None = None) -> DataFrame:
     """Manifest-driven read of the bucket-mapped assignment store,
     path-pruned to a node-id bucket subset when given."""
-    from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
-
-    return read_partitioned_store(sp, store, "abucket", _ASSIGN_SCHEMA, ids=node_buckets)
+    return read_bucketed(sp, store, "abucket", _ASSIGN_SCHEMA, ids=node_buckets)
 
 
 def _publish_shingle_buckets(store: str, rows: DataFrame, touched: list[int], bid: int) -> None:
-    from realtime_change_data_capture_streaming_spark.streaming._store import publish_bucketed_version
-
     publish_bucketed_version(
         store, rows.withColumn("sbucket", _sbucket(F.col("doc_id"))), "sbucket",
         touched, {"applied_bid": bid},
@@ -196,8 +191,6 @@ def _publish_shingle_buckets(store: str, rows: DataFrame, touched: list[int], bi
 
 
 def _publish_assign_buckets(store: str, rows: DataFrame, touched: list[int], bid: int) -> None:
-    from realtime_change_data_capture_streaming_spark.streaming._store import publish_bucketed_version
-
     publish_bucketed_version(
         store, rows.withColumn("abucket", _sbucket(F.col("node"))), "abucket",
         touched, {"applied_bid": bid},

@@ -5,13 +5,9 @@ widen on first sight instead of failing the merge."""
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import functions as F
 
 from realtime_change_data_capture_streaming_spark.cdc import apply_changes_batch, parse_envelope
-from realtime_change_data_capture_streaming_spark.cdc import commit as table_commit
 from realtime_change_data_capture_streaming_spark.cdc.apply_changes import (
     BucketedParquetSink,
     compact_sink,
@@ -134,57 +130,5 @@ def test_partial_rewrites_keep_evolved_columns(spark, tmp_path):
     sink, events, keys = _evolved_sink(spark, str(tmp_path / "wide"))
     sink.merge(_pre_evolution_updates(events))
     compact_sink(sink, purge_tombstones_through_lsn=0, max_buckets=4)
-    assert "_extra" in sink._manifest()["schema_json"]
-    _assert_evolved_values(sink, keys)
-
-
-def _edit_manifest(sink, edit) -> None:
-    """Rewrite the live ``_CURRENT`` in place, as older code left it."""
-    path = os.path.join(sink.path, table_commit.MANIFEST)
-    with open(path) as f:
-        m = json.load(f)
-    edit(m)
-    with open(path, "w") as f:
-        json.dump(m, f)
-
-
-def _narrow_unstamped(m) -> None:
-    """Older writers recorded only the schema of the buckets they wrote
-    (here: pre-evolution ones, no ``_extra``) and no completeness stamp."""
-    schema = json.loads(m["schema_json"])
-    schema["fields"] = [f for f in schema["fields"] if f["name"] != "_extra"]
-    m["schema_json"] = json.dumps(schema)
-    del m["schema_complete"]
-
-
-def test_legacy_manifests_fall_back_to_inference(spark, tmp_path):
-    """Older code left manifests with no recorded schema, or with one
-    lacking the completeness stamp that may be narrower than the table
-    (it covered only the pre-evolution buckets a merge or partial
-    compaction rewrote).  Reads, merges and partial compactions must
-    infer from the files for both and then record the WHOLE table's
-    schema, or they would drop or null out the evolved column."""
-    sink, events, keys = _evolved_sink(spark, str(tmp_path / "legacy"))
-    _edit_manifest(sink, lambda m: (m.pop("schema_json"), m.pop("schema_complete")))
-    _assert_evolved_values(sink, keys)
-    sink.merge(_pre_evolution_updates(events))
-    assert sink._manifest()["schema_complete"]
-    assert "_extra" in sink._manifest()["schema_json"]
-    _assert_evolved_values(sink, keys)
-
-    _edit_manifest(sink, _narrow_unstamped)
-    _assert_evolved_values(sink, keys)
-    # an at-least-once redelivery of the first (stale) updates into the
-    # evolved buckets: every row there is read back and rewritten
-    first = F.get_json_object("value", "$.source.lsn").cast("long") % 4 == 1
-    stale = events.filter(F.col("value").contains('"op":"u"') & first & (_bucket(32) < 8))
-    sink.merge(parse_envelope(stale, "string", capture_extras=True))
-    assert "_extra" in sink._manifest()["schema_json"]
-    _assert_evolved_values(sink, keys)
-
-    _edit_manifest(sink, _narrow_unstamped)
-    # everything but the newest bucket: the evolved buckets are rewritten
-    n_live = len(sink._manifest()["buckets"])
-    compact_sink(sink, purge_tombstones_through_lsn=0, max_buckets=n_live - 1)
     assert "_extra" in sink._manifest()["schema_json"]
     _assert_evolved_values(sink, keys)

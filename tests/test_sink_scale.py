@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -27,6 +26,10 @@ from realtime_change_data_capture_streaming_spark.cdc import parse_envelope
 from realtime_change_data_capture_streaming_spark.cdc.apply_changes import (
     BucketedParquetSink,
     compact_sink,
+)
+from realtime_change_data_capture_streaming_spark.cdc.bucketed import (
+    publish_bucketed_version,
+    read_bucketed,
 )
 from realtime_change_data_capture_streaming_spark.sources import synthetic_change_events
 
@@ -706,27 +709,53 @@ def test_bucket_map_rule_and_staging_rename(tmp_path):
     assert {grown[str(b)] for b in due} == {"v00000006"} | {f"v{10 + i:08d}" for i in range(5)}
 
 
-def test_flat_layout_sink_raises(spark, tmp_path):
-    """A sink manifest with a live version but no bucket map (the flat
-    layout) must raise on every entry point rather than be read: the
-    bucket count and the serving versions it would have to guess decide
-    which stored row a key's merge supersedes."""
-    root = str(tmp_path / "flat")
+def _flat_manifest(spark, root, events) -> None:
+    """A live version with no bucket map: the flat layout."""
     staged, seq = table_commit.begin(root)
     rows = spark.createDataFrame(
         [("k1", "c", 1, 1, 0)], "key string, op string, __lsn long, __ts_ms long, _bucket int"
     )
     rows.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
     table_commit.commit(root, seq, meta={"n_buckets": 4}, staged=staged)
-    sink = BucketedParquetSink(spark, root, n_buckets=4)
+
+
+def _unstamped_manifest(spark, root, events) -> None:
+    """A bucket-mapped manifest without the ``schema_complete`` stamp, as
+    older writers left it: its recorded schema may cover only the buckets
+    one merge or partial compaction wrote."""
+    BucketedParquetSink(spark, root, n_buckets=4).merge(events)
+    path = os.path.join(root, table_commit.MANIFEST)
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema_complete"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+
+@pytest.mark.parametrize(
+    "make, match",
+    [(_flat_manifest, "no 'buckets' map"), (_unstamped_manifest, "schema_complete")],
+    ids=["flat", "unstamped"],
+)
+def test_flat_layout_sink_raises(spark, tmp_path, make, match):
+    """A sink manifest in the flat layout (a live version but no bucket
+    map) or without a complete recorded schema must raise on every entry
+    point rather than be read: the bucket count and serving versions the
+    first would have to guess decide which stored row a key's merge
+    supersedes, and the second's schema may drop columns other buckets
+    still carry."""
+    root = str(tmp_path / "old")
     events = parse_envelope(synthetic_change_events(spark, 4, seed=3), decimal_mode="string")
+    make(spark, root, events)
+    sink = BucketedParquetSink(spark, root, n_buckets=4)
     for call in (
         lambda: sink.read(),
         lambda: sink.lookup(["k1"]),
         lambda: sink.merge(events),
         lambda: compact_sink(sink, purge_tombstones_through_lsn=0),
+        lambda: sink.changes(0),
     ):
-        with pytest.raises(ValueError, match="no 'buckets' map"):
+        with pytest.raises(ValueError, match=match):
             call()
 
 
@@ -1008,6 +1037,8 @@ def test_point_lookup_binary_keys(spark, big_parsed, tmp_path):
     """Bytes probe a binary-keyed table; a str probe is refused, not cast
     (its UTF-8 bytes are not the key the caller meant)."""
     sink = BucketedParquetSink(spark, str(tmp_path / "bin"), n_buckets=16)
+    with pytest.raises(FileNotFoundError, match="does not exist yet"):
+        sink.lookup([b"k"])
     sink.merge(big_parsed.orderBy("key").limit(50).withColumn("key", F.col("key").cast("binary")))
     key = big_parsed.select("key").orderBy("key").limit(1).collect()[0][0]
     got = sink.lookup([key.encode(), b"no-such-key"]).collect()
@@ -1040,23 +1071,19 @@ def test_point_lookup_mixed_key_types_raise(versioned_sink):
         versioned_sink.lookup([5, "6"])
 
 
-def test_point_lookup_unstamped_manifest_infers_one_bucket(
-    spark, big_parsed, versioned_sink, tmp_path
-):
-    """A manifest without a complete recorded schema (written by older
-    code) makes a GET infer the key type from ONE bucket's footers, not
-    from every version group of the table."""
-    sink = BucketedParquetSink(spark, str(tmp_path / "legacy"), n_buckets=32)
-    shutil.copytree(versioned_sink.path, sink.path)
-    path = os.path.join(sink.path, table_commit.MANIFEST)
-    with open(path) as f:
-        m = json.load(f)
-    del m["schema_complete"]
-    with open(path, "w") as f:
-        json.dump(m, f)
-    key = big_parsed.select("key").orderBy(F.desc("key")).limit(1).collect()[0][0]
+def test_bucketed_store_read_runs_one_job(spark, tmp_path):
+    """A store spanning four version dirs is read by the one bucket-mapped
+    reader with its declared schema: one Spark job (the scan), no footer
+    inference, and the schema's columns in the schema's order even where
+    the partition column sits mid-row."""
+    store = str(tmp_path / "store")
+    schema = "id bigint, b int, v string"
+    for i in range(4):
+        rows = spark.createDataFrame([(i * 10 + j, i, f"v{i}") for j in range(3)], schema)
+        publish_bucketed_version(store, rows, "b", [i], {"applied_bid": i})
+    assert len(set(table_commit.read_manifest(store)["buckets"].values())) == 4
     got = []
-    jobs = _jobs_run_by(spark, lambda: got.extend(sink.lookup([key]).collect()))
-    assert [r["transaction_id"] for r in got] == [key]
-    # one inference for the key type, one for the probe bucket's group
-    assert len([j for j in jobs if _is_footer_inference(j)]) <= 2, jobs
+    jobs = _jobs_run_by(spark, lambda: got.extend(read_bucketed(spark, store, "b", schema).collect()))
+    assert len(jobs) == 1 and not _is_footer_inference(jobs[0]), jobs
+    assert sorted(tuple(r) for r in got) == [(i * 10 + j, i, f"v{i}") for i in range(4) for j in range(3)]
+    assert got[0].__fields__ == ["id", "b", "v"]

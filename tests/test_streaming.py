@@ -227,8 +227,8 @@ def test_txn_gate_compaction_bounds_pending_without_changing_final_state(spark):
         cdc_txn_consistent_apply,
         txn_change_events,
     )
+    from realtime_change_data_capture_streaming_spark.cdc.bucketed import read_bucketed
     from realtime_change_data_capture_streaming_spark.session import scratch_dir
-    from realtime_change_data_capture_streaming_spark.streaming._store import read_partitioned_store
     from realtime_change_data_capture_streaming_spark.streaming.cdc_stream import _run_txn_stream
 
     sf_dir = "/root/testdata/sf0.001"
@@ -258,7 +258,7 @@ def test_txn_gate_compaction_bounds_pending_without_changing_final_state(spark):
     )
     assert incomplete, "fixture must have permanently-incomplete transactions"
     pend_schema = parsed.withColumn("tb", F.lit(0).cast("bigint")).schema
-    pend = read_partitioned_store(spark, paths["pending"], "tb", pend_schema)
+    pend = read_bucketed(spark, paths["pending"], "tb", pend_schema)
     held = set(r["txn_id"] for r in pend.select("txn_id").distinct().collect())
     assert held == incomplete, (sorted(held)[:5], sorted(incomplete)[:5])
     # bounded: far fewer rows than the full feed
